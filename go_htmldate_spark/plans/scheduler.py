@@ -40,6 +40,17 @@ from .canonical import canonicalize_url, url_hash, url_host, url_path
 
 REF_DATE = "2024-06-01"
 
+# Rows per file of a URL-seen delta or compaction: 4 Mi 8-byte hashes,
+# ~32 MB of parquet. The seen set is only ever scanned whole (the exact
+# anti-join, bloom rebuilds, compaction), so the read cost of a segment
+# is its file count; a round's ~1k-row delta is one file.
+SEEN_ROWS_PER_FILE = 4 << 20
+
+
+def _seen_files(n_rows: int) -> int:
+    """File count for a seen segment of n_rows hashes (at least one)."""
+    return max(1, -(-n_rows // SEEN_ROWS_PER_FILE))
+
 
 @dataclass
 class CrawlConfig:
@@ -71,13 +82,13 @@ class CrawlConfig:
     seen_filter: str = "bloom"
     cuckoo_buckets: int = 1 << 15
     # URL-seen state maintenance: each round appends ONLY that round's
-    # scheduled hashes as a bucket-partitioned delta (write volume
-    # O(new), not O(total seen) — at 10^10 URLs a full rewrite per round
-    # is the scale killer); every seen_compact_every rounds the chain is
-    # compacted into one table to bound read fan-in.  Deltas are
+    # scheduled hashes as a flat (unpartitioned) parquet delta of
+    # ceil(rows / SEEN_ROWS_PER_FILE) files (write volume O(new), not
+    # O(total seen) — at 10^10 URLs a full rewrite per round is the
+    # scale killer); every seen_compact_every rounds the chain is
+    # compacted into one flat table to bound read fan-in.  Deltas are
     # disjoint by construction (scheduled ⊆ candidates, which were
     # anti-joined against seen), so no distinct() is ever needed.
-    seen_buckets: int = 64
     seen_compact_every: int = 8
     # crawl-trap guard (plans/traps.py): when on, discovered outlinks
     # that look like infinite URL spaces — depth caps, Heritrix-style
@@ -536,8 +547,11 @@ class CrawlScheduler:
 
     def _seen_from_chain(self, chain: list[str]) -> DataFrame:
         """The URL-seen set as the union of its delta/compact segments
-        (bucket-partitioned parquet; read volume is columnar on one
-        long column, write volume per round was O(new))."""
+        (flat parquet of one long column, SEEN_ROWS_PER_FILE rows per
+        file; write volume per round was O(new)). Snapshots written in
+        the older layout, partitioned by a hash bucket column `b`, read
+        the same way: partition discovery adds `b` and the projection
+        drops it."""
         if not chain:
             return self.spark.createDataFrame([], "url_hash long")
         from functools import reduce
@@ -782,6 +796,7 @@ class CrawlScheduler:
         # concurrent writes below). Row placement does not affect any
         # per-row result.
         n_sched_now = scheduled.count()
+        t_sched = time.time()
         n_part = max(
             1,
             min(
@@ -866,8 +881,12 @@ class CrawlScheduler:
                 min_repeat=cfg.trap_min_repeat,
             )
         if self.host_budget is not None:
+            # the budget column of the cached host dimension, not the raw
+            # budget table: a Python-local table would re-run its
+            # PythonRDD scan every round. Unlisted hosts get the default.
             discovered = discovered.join(
-                F.broadcast(self.host_budget), "host", "left"
+                F.broadcast(self._host_dim.select("host", "politeness_budget")),
+                "host", "left",
             ).withColumn(
                 "budget", F.coalesce("politeness_budget", F.lit(cfg.default_budget))
             ).drop("politeness_budget")
@@ -889,14 +908,14 @@ class CrawlScheduler:
         scheduled_hashes = scheduled.select("url_hash").observe(
             obs_sched, F.count(F.lit(1)).alias("n")
         )
-        # URL-seen delta: ONLY this round's scheduled hashes, laid out
-        # by hash bucket.  Deltas are disjoint by construction (scheduled
-        # came out of the seen anti-join), so seen == union of segments
-        # with no distinct(): per-round seen write volume is O(new URLs),
-        # never O(total seen) — the 10^10-URL-safe shape.
-        seen_delta = scheduled_hashes.withColumn(
-            "b", F.pmod(F.col("url_hash"), F.lit(cfg.seen_buckets)).cast("int")
-        )
+        # URL-seen delta: ONLY this round's scheduled hashes, as flat
+        # parquet of _seen_files(n) files (every later round scans it
+        # whole, so no partition column).  Deltas are disjoint by
+        # construction (scheduled came out of the seen anti-join), so
+        # seen == union of segments with no distinct(): per-round seen
+        # write volume is O(new URLs), never O(total seen) — the
+        # 10^10-URL-safe shape.
+        seen_delta = scheduled_hashes.coalesce(_seen_files(n_sched_now))
         new_seen_hashes = self.seen.unionByName(
             scheduled_hashes.select("url_hash")
         )
@@ -935,39 +954,32 @@ class CrawlScheduler:
         from concurrent.futures import ThreadPoolExecutor
 
         writes = [
-            (fetch_order, None, f"{base}/fetched"),
-            (new_frontier, None, f"{base}/frontier"),
-            (seen_delta, "b", f"{base}/seen_delta"),
+            (fetch_order, f"{base}/fetched"),
+            (new_frontier, f"{base}/frontier"),
+            (seen_delta, f"{base}/seen_delta"),
         ]
 
         def _write(w):
-            df, part_col, path = w
-            writer = df.write.mode("overwrite")
-            if part_col is not None:
-                writer = writer.partitionBy(part_col)
-            writer.parquet(path)
+            df, path = w
+            df.write.mode("overwrite").parquet(path)
 
         with ThreadPoolExecutor(3) as pool:
             list(pool.map(_write, writes))
+        t_write = time.time()
         n_scheduled = int(obs_sched.get["n"])
         n_seen = self._seen_count + n_scheduled  # deltas are disjoint
         n_fetched = int(obs_fetched.get["n"])
 
         # chain maintenance + periodic compaction (amortizes the only
-        # O(total) operation across seen_compact_every rounds); empty
-        # rounds append nothing (a zero-row partitioned dir can't be
-        # re-read)
+        # O(total) operation across seen_compact_every rounds) into one
+        # flat table sized like a delta; empty rounds append nothing
         new_chain = list(self._seen_chain)
         if n_scheduled > 0:
             new_chain.append(f"round_{self.round}/seen_delta")
         if len(new_chain) > cfg.seen_compact_every:
-            compacted = self._seen_from_chain(new_chain).withColumn(
-                "b",
-                F.pmod(F.col("url_hash"), F.lit(cfg.seen_buckets)).cast("int"),
-            )
-            compacted.write.mode("overwrite").partitionBy("b").parquet(
-                f"{base}/seen_compact"
-            )
+            self._seen_from_chain(new_chain).coalesce(
+                _seen_files(n_seen)
+            ).write.mode("overwrite").parquet(f"{base}/seen_compact")
             new_chain = [f"round_{self.round}/seen_compact"]
         self._seen_chain = new_chain
 
@@ -988,11 +1000,20 @@ class CrawlScheduler:
         else:
             new_blooms = self.blooms
         new_blooms.write.mode("overwrite").parquet(f"{base}/blooms")
+        t_seen = time.time()
 
         # reload from snapshot: truncates lineage (no ever-growing plan)
         self.frontier = self.spark.read.parquet(f"{base}/frontier")
         self.seen = self._seen_from_chain(self._seen_chain)
         self.blooms = self.spark.read.parquet(f"{base}/blooms")
+        t_reload = time.time()
+        # per-phase wall from time.time() marks only (no extra Spark job)
+        phase_ms = {
+            "schedule": t_sched - t0,  # through scheduled.count()
+            "fetch_extract_write": t_write - t_sched,
+            "seen_bloom": t_seen - t_write,
+            "reload": t_reload - t_seen,
+        }
 
         if self._opic_state is not None:
             # online OPIC sweep: this round's fetched hosts spend their
@@ -1036,6 +1057,7 @@ class CrawlScheduler:
                 opic_budgets(self._opic_state, cfg.opic_lo, cfg.opic_hi),
             )
             self._rebuild_host_dim()
+            phase_ms["opic"] = time.time() - t_reload
 
         import pyarrow.parquet as pq
 
@@ -1059,6 +1081,7 @@ class CrawlScheduler:
             "n_seen": n_seen,
             "wall_ms": int((time.time() - t0) * 1000),
             "frontier_partitions": part_stats,
+            "phase_ms": {k: int(v * 1000) for k, v in phase_ms.items()},
         }
         with open(f"{base}/manifest.json", "w") as f:
             json.dump(manifest, f)

@@ -13,6 +13,21 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Half of the host's physical memory, capped at 24g: the heap must
+    leave room for Python workers, off-heap buffers and the OS, or the
+    kernel OOM-kills the JVM. 24g when MemTotal is unreadable."""
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    total_mb = int(line.split()[1]) // 1024
+                    return f"{min(24 << 10, total_mb // 2)}m"
+    except OSError:
+        pass
+    return "24g"
+
+
 def get_spark(
     app_name: str = "go-htmldate-spark",
     master: str | None = None,
@@ -37,16 +52,15 @@ def get_spark(
     # per core spreads multi-file reads without touching row-group
     # bound parquet scans.
     min_parts = os.environ.get("SPARK_GRAFT_MIN_PARTITION_NUM", cpus)
-    # Shuffle/scratch directory. This sandbox's disk is the noisy
-    # resource (multi-second I/O-wait phases while CPUs idle), so
-    # shuffle files and spills default to tmpfs when /dev/shm exists —
-    # RAM-backed, bounded by the same memory budget the block manager
-    # already uses. Production nodes with real local SSDs should point
-    # SPARK_GRAFT_LOCAL_DIR at them (guide §2.1: local disk bandwidth
-    # for shuffle files can be the tighter limit).
-    default_local = "/dev/shm/spark_graft_tmp" if os.path.isdir("/dev/shm") \
-        else None
-    local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR", default_local)
+    # Shuffle/scratch directory: Spark's default (java.io.tmpdir) unless
+    # SPARK_GRAFT_LOCAL_DIR names one. Pointing it at tmpfs (e.g.
+    # /dev/shm/spark_graft_tmp) helps on hosts whose disk is the noisy
+    # resource, but tmpfs pages are RAM outside the JVM heap and every
+    # other memory budget: shuffle files and spills there grow until
+    # the host runs out of memory. Nodes with real local SSDs should
+    # point it at them (guide §2.1: local disk bandwidth for shuffle
+    # files can be the tighter limit).
+    local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -72,7 +86,8 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         # local mode runs every task thread in the driver JVM: size the
         # heap for the thread count or 32 string-heavy tasks GC-thrash
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )

@@ -296,9 +296,14 @@ def test_from_html_accepts_raw_bytes():
     """FromReader parity: bytes input is charset-sniffed, not silently
     empty (regression: the str-typed parser returned no tokens for
     bytes)."""
-    from go_htmldate_spark import Options, from_html
-
-    raw = open("/root/reference/test-files/mock/github.com.html", "rb").read()
-    assert from_html(raw, Options()).date == "2017-11-28"
     latin = "<html><head><meta charset='iso-8859-1'></head><body><time datetime='2019-03-05'>5. M\xe4rz 2019</time></body></html>".encode("iso-8859-1")
     assert from_html(latin, Options()).date == "2019-03-05"
+
+
+@pytest.mark.reference_corpus
+def test_from_html_accepts_raw_bytes_mock_page():
+    """The bytes path on a real page of the reference corpus."""
+    from go_htmldate_spark.sources.mockcorpus import MOCK_DIR
+
+    raw = open(f"{MOCK_DIR}/github.com.html", "rb").read()
+    assert from_html(raw, Options()).date == "2017-11-28"

@@ -134,6 +134,7 @@ def _c_build_tree(html: str) -> Node:
     return root
 
 
+@pytest.mark.reference_corpus
 @pytest.mark.parametrize("path", MOCK_PAGES, ids=[p.rsplit("/", 1)[1] for p in MOCK_PAGES])
 def test_mock_page_parity(path):
     html = open(path, encoding="utf-8", errors="replace").read()
@@ -144,6 +145,7 @@ def test_mock_page_parity(path):
     assert _tree_sig(c_root) == _tree_sig(p_root)
 
 
+@pytest.mark.reference_corpus
 @pytest.mark.parametrize(
     "path", MOCK_PAGES[::4], ids=[p.rsplit("/", 1)[1] for p in MOCK_PAGES[::4]]
 )
@@ -241,6 +243,7 @@ def test_parse_attrs_parity():
         assert cdom.parse_attrs(raw) == _parse_attrs(raw), raw
 
 
+@pytest.mark.reference_corpus
 def test_eval_corpus_sample_parity():
     """Tree parity over a slice of the real 1000-doc eval corpus."""
     import sys
@@ -580,6 +583,7 @@ def test_scan_prelude_edge_parity(html):
     _scan_equiv_or_bail(html)
 
 
+@pytest.mark.reference_corpus
 @pytest.mark.parametrize(
     "path", MOCK_PAGES, ids=[p.rsplit("/", 1)[1] for p in MOCK_PAGES]
 )
@@ -589,6 +593,7 @@ def test_scan_prelude_mock_parity(path):
     _scan_equiv_or_bail(sniff_decode(open(path, "rb").read()))
 
 
+@pytest.mark.reference_corpus
 @pytest.mark.parametrize(
     "path", MOCK_PAGES, ids=[p.rsplit("/", 1)[1] for p in MOCK_PAGES]
 )

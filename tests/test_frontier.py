@@ -571,7 +571,7 @@ def test_time_travel_supersedes_later_rounds(spark, corpus, tmp_path_factory):
 
 def test_seen_delta_write_volume_is_o_new(spark, corpus, corpus_dates, tmp_path_factory):
     """Round-3 scale fix: each round writes ONLY its scheduled hashes as
-    a bucket-partitioned seen delta — write volume O(new URLs), never
+    a seen delta — write volume O(new URLs), never
     O(total seen) — and the union of deltas equals the exact seen set."""
     import glob as _glob
     import json as _json
@@ -633,6 +633,93 @@ def test_seen_compaction_keeps_parity(spark, corpus, corpus_dates, tmp_path_fact
     orc4 = _run_oracle(corpus_dates, seeds, n_rounds=4)
     log4 = _spark_fetch_log(spark, d, 4)
     assert log4 == orc4.fetch_log[: len(log4)]
+
+
+def test_seen_segments_are_flat_and_sized(
+    spark, corpus, corpus_dates, tmp_path_factory, monkeypatch
+):
+    """Seen deltas and compactions are flat parquet: no `b=` bucket
+    directories, and at most ceil(rows / SEEN_ROWS_PER_FILE) files per
+    segment. A small rows-per-file makes the bound bite on a 300-page
+    crawl. The manifest reports per-phase wall time."""
+    import glob as _glob
+    import os as _os
+
+    import pyarrow.parquet as _pq
+
+    from go_htmldate_spark.plans import scheduler as _sched_mod
+
+    monkeypatch.setattr(_sched_mod, "SEEN_ROWS_PER_FILE", 4)
+    seeds = _seeds(corpus)
+    d = tmp_path_factory.mktemp("seen_flat")
+    # compact_every=2: rounds 0-1 append deltas, round 2 compacts
+    _, manifests = _run_spark(
+        spark, corpus, seeds, d, n_rounds=3, seen_compact_every=2
+    )
+    assert len(manifests) == 3
+    assert manifests[-1]["seen_chain"] == ["round_2/seen_compact"]
+    orc = _run_oracle(corpus_dates, seeds, n_rounds=3)
+    assert _spark_fetch_log(spark, d, 3) == orc.fetch_log[:3]
+
+    segments = _glob.glob(f"{d}/round_*/seen_delta") + _glob.glob(
+        f"{d}/round_*/seen_compact"
+    )
+    assert len(segments) == 4
+    for seg in segments:
+        assert not _glob.glob(f"{seg}/b=*"), seg
+        assert not [e for e in _os.scandir(seg) if e.is_dir()], seg
+        files = _glob.glob(f"{seg}/*.parquet")
+        rows = sum(_pq.ParquetFile(p).metadata.num_rows for p in files)
+        assert rows > 0
+        assert 1 <= len(files) <= -(-rows // 4), (seg, rows, len(files))
+
+    for m in manifests:
+        assert {"schedule", "fetch_extract_write", "seen_bloom", "reload"} == set(
+            m["phase_ms"]
+        )
+        assert all(isinstance(v, int) and v >= 0 for v in m["phase_ms"].values())
+        assert sum(m["phase_ms"].values()) <= m["wall_ms"]
+
+
+def test_resume_reads_bucket_partitioned_seen_segment(
+    spark, corpus, corpus_dates, tmp_path_factory
+):
+    """Snapshots from before the flat layout wrote each seen segment
+    partitioned by a hash bucket column `b`. A chain whose first segment
+    is in that layout must resume and crawl on in oracle parity."""
+    import glob as _glob
+    import shutil as _shutil
+
+    seeds = _seeds(corpus)
+    d = tmp_path_factory.mktemp("seen_legacy")
+    _run_spark(spark, corpus, seeds, d, n_rounds=2)
+
+    seg = f"{d}/round_0/seen_delta"
+    hashes = [r.url_hash for r in spark.read.parquet(seg).collect()]
+    assert hashes
+    _shutil.rmtree(seg)
+    spark.createDataFrame([(h,) for h in hashes], "url_hash long").withColumn(
+        "b", F.pmod(F.col("url_hash"), F.lit(64)).cast("int")
+    ).write.partitionBy("b").parquet(seg)
+    assert _glob.glob(f"{seg}/b=*")
+
+    sched = CrawlScheduler(
+        spark, corpus, robots=_robots_df(spark), host_budget=_budget_df(spark),
+        state_dir=str(d),
+        config=CrawlConfig(n_bloom_partitions=4, bloom_bits=1 << 16, n_salts=4,
+                           bloom_min_seen=0),
+    )
+    assert sched.resume() == 2
+    assert sched.seen.columns == ["url_hash"]
+    sched.run_round()
+    orc = _run_oracle(corpus_dates, seeds, n_rounds=3)
+    assert _spark_fetch_log(spark, d, 3) == orc.fetch_log[:3]
+    oracle_seen = {
+        r.h for r in spark.createDataFrame(
+            [(u,) for u in orc.seen], "url string"
+        ).select(F.xxhash64("url").alias("h")).collect()
+    }
+    assert {r.url_hash for r in sched.seen.collect()} == oracle_seen
 
 
 def test_cuckoo_cogrouped_probe_matches_broadcast(spark):

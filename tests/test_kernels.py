@@ -393,6 +393,7 @@ def test_extraction_leaves_no_cyclic_garbage():
 
 # -- idiosyncrasies windowed fast path: differential vs direct search --------
 
+@pytest.mark.reference_corpus
 def test_idiosyncrasies_fast_equals_slow_on_corpus():
     """The windowed idiosyncrasies search must be byte-identical (span +
     groups) to the direct single-pass regex on every mock page."""
@@ -479,6 +480,7 @@ except ImportError:  # pragma: no cover
 
 # -- long-text windowed fast path: differential vs direct search -------------
 
+@pytest.mark.reference_corpus
 def test_long_text_fast_equals_direct_on_corpus():
     """_long_text_search (year-core windows) must be byte-identical
     (span + groupdict) to the direct RX_LONG_TEXT search on every mock

@@ -22,6 +22,9 @@ from go_htmldate_spark.sources.mockcorpus import (
 )
 
 
+pytestmark = pytest.mark.reference_corpus
+
+
 @pytest.mark.parametrize(
     "url,expected,mode",
     CASES,
