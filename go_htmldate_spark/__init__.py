@@ -8,7 +8,11 @@ batches, native Catalyst fast paths for URL dates, and a partitioned,
 bloom-filtered URL frontier for Common-Crawl-scale corpora.
 """
 
-from .cascade import ExtractionResult, from_document, from_html
+from . import workerimport
+
+workerimport.install()
+
+from .cascade import ExtractionResult, from_document, from_html  # noqa: E402
 from .options import Options
 
 __all__ = ["ExtractionResult", "Options", "from_document", "from_html"]

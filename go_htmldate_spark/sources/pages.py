@@ -190,7 +190,8 @@ def synth_pages(
     # 5-digit article number: a bare 4-digit id (e.g. 2003) would be a
     # legitimate bare-year hit for the extensive search on "none" pages
     title = F.concat(F.lit("Article "), (i + 50000).cast("string"))
-    # filler_repeats sizes pages toward realistic crawl payloads (~0.5KB × 2·r)
+    # filler_repeats sizes pages toward realistic crawl payloads: a page
+    # is ~0.4k chars at r=1 and ~4.0k at r=16 (~0.25k per repeat)
     filler = F.lit(" ".join([_FILLER] * filler_repeats))
 
     text = F.concat_ws(" ", title, filler, F.when(stage != "none", iso).otherwise(F.lit("")))

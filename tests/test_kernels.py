@@ -549,3 +549,231 @@ try:
         assert ka == kb
 except ImportError:  # pragma: no cover
     pass
+
+
+# -- run-anchored scanners: differential vs finditer -------------------------
+
+def _run_finders():
+    """(name, run-anchored finder, finditer oracle) for every scanner
+    that search_page runs only at digit-run starts."""
+    from go_htmldate_spark.functions import finders as F
+    from go_htmldate_spark.functions import patterns as P
+
+    return [
+        (name, getattr(F, name), F._mk_finder(rx))
+        for name, rx in [
+            ("three_loose_finder", P.RX_THREE_LOOSE_SCAN),
+            ("select_ymd_finder", P.RX_SELECT_YMD_SCAN),
+            ("date_strings_finder", P.RX_DATESTRINGS_SCAN),
+            ("slashes_finder", P.RX_SLASHES_SCAN),
+            ("yyyy_mm_finder", P.RX_YYYYMM_SCAN),
+            ("mm_yyyy_finder", P.RX_MMYYYY_SCAN),
+            ("simple_finder", P.RX_SIMPLE_SCAN),
+        ]
+    ]
+
+
+_RUN_FINDERS = _run_finders()
+
+
+def _assert_run_finders_exact(s: str) -> None:
+    """Every run-anchored finder equals finditer with the default
+    density switch and with anchoring forced on (_DENSE = 0)."""
+    from go_htmldate_spark.functions import finders as F
+
+    dense = F._DENSE
+    try:
+        for switch in (dense, 0):
+            F._DENSE = switch
+            F._anchor_cache = ("", [])
+            for name, fast, oracle in _RUN_FINDERS:
+                assert fast(s) == oracle(s), (name, switch, s[:120])
+    finally:
+        F._DENSE = dense
+        F._anchor_cache = ("", [])
+
+
+# digit-dense markup: an inline SVG path and a JSON number array, with
+# a digit-run start every 3-6 characters
+_DENSE_BLOCK = (
+    '<svg viewBox="0 0 24 24"><path d="M12 2C6.48 2 2 6.48 2 12s4.48 10 '
+    '10 10 10-4.48 10-10S17.52 2 12 2zm-2 15l-5-5 1.41-1.41L10 14.17l7.59'
+    '-7.59L19 8l-9 9z"/></svg>'
+) * 12 + "<script>var d=[" + ",".join(
+    str(i * 7919 % 100000) for i in range(300)
+) + "];</script>"
+
+
+def _serialize(html: str) -> str:
+    from go_htmldate_spark.dom import parser as domp
+
+    doc = domp.parse_html(html)
+    try:
+        return domp.inner_html(doc)
+    finally:
+        domp.release_tree(doc)
+
+
+@pytest.fixture(scope="module")
+def synth_docs(spark):
+    """Raw HTML of synth pages at filler_repeats 1 and 16, with urls;
+    key "dense" holds the first 200 at 1 with _DENSE_BLOCK added to the
+    body."""
+    from go_htmldate_spark.operators.extract import sniff_decode
+    from go_htmldate_spark.sources.pages import synth_pages
+
+    docs = {
+        r: [
+            (row["url"], sniff_decode(bytes(row["html"])))
+            for row in synth_pages(spark, 400, seed=17 + r, filler_repeats=r)
+            .select("url", "html").collect()
+        ]
+        for r in (1, 16)
+    }
+    docs["dense"] = [
+        (url, html.replace("<body>", "<body>" + _DENSE_BLOCK, 1))
+        for url, html in docs[1][:200]
+    ]
+    return docs
+
+
+@pytest.mark.parametrize("filler_repeats", [1, 16, "dense"])
+def test_run_finders_equal_finditer_on_synth_pages(synth_docs, filler_repeats):
+    """On the serialized HTML search_page scans (and on the raw page),
+    every run-anchored finder equals finditer on the same pattern."""
+    for _, html in synth_docs[filler_repeats]:
+        _assert_run_finders_exact(_serialize(html))
+        _assert_run_finders_exact(html)
+
+
+def test_run_anchor_switch_on_synth_pages(synth_docs):
+    """Article pages take the anchored path, digit-dense pages fall back
+    to finditer."""
+    from go_htmldate_spark.functions import finders as F
+
+    for key, anchored in ((1, True), (16, True), ("dense", False)):
+        for _, html in synth_docs[key]:
+            F._anchor_cache = ("", [])
+            assert (F._run_anchors(_serialize(html)) is not None) == anchored, key
+    F._anchor_cache = ("", [])
+
+
+def _anchors_reference(s: str) -> list[int]:
+    return [m.start() for m in re.finditer(r"(?=[^0-9][0-9])", s)]
+
+
+def test_run_anchors_positions():
+    """The byte-flag scan finds exactly the non-digit/digit boundaries,
+    also past characters outside latin-1 (one "?" byte each)."""
+    from go_htmldate_spark.functions import finders as F
+
+    dense = F._DENSE
+    F._DENSE = 0
+    try:
+        for s in [
+            "", "7", "a7", "7a", "a7b", "a77b88", "12 34 56",
+            "中1文22字333", "😀1😀", "\udc80" + "9\udc809", "١٢٣ 4",
+            "é1ß2\xff3\x004",
+        ]:
+            F._anchor_cache = ("", [])
+            assert F._run_anchors(s) == _anchors_reference(s), s
+    finally:
+        F._DENSE = dense
+        F._anchor_cache = ("", [])
+
+
+def test_run_finders_adversarial_pins():
+    """Matches back to back, sharing a delimiter, at the string edges,
+    digit runs at index 0 and at the end, runs inside runs."""
+    cases = [
+        " 2020-01-02 2021-03-04 ",
+        " 2020-01-02 2021-03-04",
+        "2020-01-02 2021-03-04 ",
+        "2020 2021 2022 ",
+        " 2020.2021.2022 ",
+        "x1/2/2020/3/4/2021/",
+        " 01/02/03/04/05/06 ",
+        " 20200102 19991231 ",
+        "120200102 ",
+        " 2020010299 ",
+        " 12.05.2018",
+        "© 2019-2020 ",
+        "©2019©2020©",
+        "a1b22c333d4444e55555",
+        "0",
+        " 0",
+        "0 ",
+        "",
+        " ",
+        "\n2020-1\n",
+        " 2020-12-31-2021-01-01 ",
+        " 1999/12 2000/01 ",
+        " 12-2020-12-2021 ",
+    ]
+    for s in cases:
+        _assert_run_finders_exact(s)
+
+
+@pytest.mark.reference_corpus
+def test_run_finders_equal_finditer_on_corpus():
+    import glob
+    import os
+
+    from go_htmldate_spark.sources.mockcorpus import MOCK_DIR
+
+    files = sorted(glob.glob(os.path.join(MOCK_DIR, "*.html")))
+    assert files
+    for f in files:
+        _assert_run_finders_exact(open(f, encoding="utf-8", errors="replace").read())
+
+
+try:
+    from hypothesis import given as _rf_given, settings as _rf_settings
+    from hypothesis import strategies as _rf_st
+
+    # dense in digits and the scanners' separators, plus ©, letters
+    # and characters outside latin-1
+    _RF_ALPHABET = "0123456789012345678901239/.-/.- ©x\n中😀١"
+
+    @_rf_given(_rf_st.text(alphabet=_RF_ALPHABET, max_size=80))
+    @_rf_settings(max_examples=500, deadline=None)
+    def test_run_finders_equal_finditer_fuzz(s):
+        _assert_run_finders_exact(s)
+
+    @_rf_given(_rf_st.text(alphabet=_RF_ALPHABET, max_size=80))
+    @_rf_settings(max_examples=300, deadline=None)
+    def test_run_anchors_fuzz(s):
+        from go_htmldate_spark.functions import finders as F
+
+        F._anchor_cache = ("", [])
+        anchors = F._run_anchors(s)
+        assert anchors is None or anchors == _anchors_reference(s)
+except ImportError:  # pragma: no cover
+    pass
+
+
+def test_from_html_unchanged_with_finditer_finders(synth_docs, monkeypatch):
+    """End to end: from_html gives the same result with the finditer
+    finders patched back into the cascade."""
+    from go_htmldate_spark.cascade import from_html
+    from go_htmldate_spark.functions import finders as F
+
+    option_sets = [
+        Options(),
+        Options(use_original_date=True),
+        Options(use_original_date=True, skip_extensive_search=True),
+    ]
+    docs = [d for r in (1, 16, "dense") for d in synth_docs[r]]
+
+    def run_all():
+        return [
+            from_html(html, o.with_url(url) if with_url else o)
+            for url, html in docs
+            for o in option_sets
+            for with_url in (False, True)
+        ]
+
+    fast = run_all()
+    for name, _, oracle in _RUN_FINDERS:
+        monkeypatch.setattr(F, name, oracle)
+    assert run_all() == fast
