@@ -417,12 +417,12 @@ def q_ann_cosine_topk(spark, sf_dir):
 
 
 def q_event_time_windows(spark, sf_dir):
-    """Event-time windowed per-host rates (streaming/extractor.
-    host_fetch_rates — identical operator runs under readStream with a
-    watermark; the batch form is the oracle-checkable projection).
-    Events become crawl records: deterministic URL per event, ts as
-    warc_ts."""
-    from go_htmldate_spark.streaming.extractor import host_fetch_rates
+    """Event-time windowed per-host rates (operators/extract.
+    host_fetch_rates — a watermarked window aggregation that also runs
+    unchanged on a streaming DataFrame; this batch form is the
+    oracle-checkable projection). Events become crawl records:
+    deterministic URL per event, ts as warc_ts."""
+    from go_htmldate_spark.operators.extract import host_fetch_rates
 
     ev = _t(spark, sf_dir, "events")
     pages = ev.select(
@@ -1063,7 +1063,7 @@ def q_parked_hosts(spark, sf_dir):
     """§2.9 crawl-waste: per-host parked-rate roll-up
     (plans/parked.parked_host_stats) — the scheduler-facing currency:
     hosts whose pages are (1/2 of 6 classes) parking templates read
-    rate 0.5 and cross parked_demotion's threshold only when the
+    rate 0.5 and cross parked_budget_demotion's threshold only when the
     planted mix says so. One partial-aggregated host exchange."""
     from go_htmldate_spark.plans.parked import parked_flags, parked_host_stats
 
@@ -3369,7 +3369,7 @@ def q_anchor_text(spark, sf_dir):
 
 
 def q_soft404(spark, sf_dir):
-    """Pipeline: soft-404 detection (plans/soft404.soft404_flags) —
+    """Pipeline: soft-404 detection (plans/soft404.soft404_signal_flags) —
     error pages served with HTTP 200 (Bar-Yossef et al. WWW'04): an
     error-phrase + tiny-body conjunction catches phrase templates, a
     (host, md5(text)) group spanning >= 5 distinct urls catches
@@ -3400,12 +3400,6 @@ def q_soft404(spark, sf_dir):
         .otherwise(F.concat(F.lit("Article body. "), filler,
                             okey.cast("string")))
     )
-    # materialize the synthesized corpus (a real deployment reads pages
-    # from storage): soft404_flags consumes its input TWICE (per-page
-    # flags + the template aggregation), and without the barrier both
-    # branches re-run the synth CASE — worse, the template branch's
-    # tiny-body filter pushes below the spread exchange onto the 1-2
-    # scan tasks (r06 before-plan)
     # soft404_signal_flags computes the per-page regex/md5 chain ONCE
     # into a narrow internal barrier that both its branches read — no
     # page-text materialization, no per-branch re-scan (r06)

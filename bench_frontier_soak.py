@@ -1,11 +1,14 @@
-"""Mega-scale frontier soak (round-4 item 5): 10+ crawl rounds over a
+"""Mega-scale frontier soak: 10+ crawl rounds over a
 1.6M-page corpus with every at-scale state path active, verifying that
 per-round wall stays flat while the URL-seen set grows to ~10^6.
 
 What it exercises per round:
-- cuckoo URL-seen pre-filter in the COGROUPED no-broadcast mode (state
+- bloom URL-seen pre-filter in the COGROUPED no-broadcast mode (state
   sized past bloom_broadcast_max_bytes, so shards never transit the
-  driver) + the exact anti-join backstop;
+  driver: probe_blooms_cogrouped) + the exact anti-join backstop; it
+  probes from the first round whose seen set has reached
+  bloom_min_seen = min(50k, n_pages/10) — each ROUND line reports
+  bloom_probed;
 - O(new) seen-delta writes (asserted: the round's seen_delta parquet
   holds exactly n_scheduled rows, never O(total seen));
 - periodic chain compaction (seen_compact_every=4 → two crossings in a
@@ -53,17 +56,19 @@ def main() -> None:
     )
 
     cfg = CrawlConfig(
-        seen_filter="cuckoo",
         n_bloom_partitions=16,
-        cuckoo_buckets=1 << 15,
+        bloom_bits=1 << 20,
         # force the cogrouped (no-broadcast) probe: state_bytes =
-        # 16 * 32768 * SLOTS > 1 MiB
+        # 16 * (2^20 / 8) = 2 MiB > 1 MiB
         bloom_broadcast_max_bytes=1 << 20,
-        bloom_min_seen=50_000,
+        # small soaks still cross the threshold within a few rounds
+        bloom_min_seen=min(50_000, n_pages // 10),
         seen_compact_every=4,
         default_budget=4.0,
         salt_threshold=10_000,
     )
+    assert (cfg.n_bloom_partitions * cfg.bloom_bits // 8
+            > cfg.bloom_broadcast_max_bytes), "soak must take the cogrouped probe"
     state_dir = tempfile.mkdtemp(prefix="soak_")
     rows = []
     try:
@@ -77,6 +82,7 @@ def main() -> None:
         )
         sched.init_from_seeds(seeds)
 
+        seen_before = 0
         for r in range(n_rounds):
             t0 = time.time()
             m = sched.run_round()
@@ -113,8 +119,11 @@ def main() -> None:
                     "n_frontier": m["n_frontier"],
                     "chain_len": len(m["seen_chain"]),
                     "compacted": compacted,
+                    # the round probed the (cogrouped) bloom filter
+                    "bloom_probed": seen_before >= cfg.bloom_min_seen,
                 }
             )
+            seen_before = m["n_seen"]
             print("ROUND " + json.dumps(rows[-1]), flush=True)
             if m["n_scheduled"] == 0:
                 break

@@ -570,28 +570,8 @@ _CLEAN_TAGS = frozenset(
 )
 
 
-def clean_document(doc: domp.Node, in_place: bool = False) -> domp.Node:
-    """Drop embed/frame/media tags (utils.go:32-60); clones first like the
-    reference unless the caller owns the tree (find_date does — nothing
-    reads the unpruned doc after this point, core.go:170-271)."""
-    clone = doc if in_place else doc.clone()
-    for node in [e for e in clone.iter_elements() if e.tag in _CLEAN_TAGS]:
-        node.remove()
-    return clone
-
-
-def discard_unwanted(doc: domp.Node) -> list[domp.Node]:
-    """Remove archive.org banner divs (extractors.go:36-46)."""
-    discarded = []
-    for elem in sel.query_all(doc, sel.discard_rule):
-        if elem.parent is not None:
-            elem.remove()
-            discarded.append(elem)
-    return discarded
-
-
 def _prune_and_collect(doc: domp.Node) -> list[domp.Node]:
-    """clean_document(in_place) + discard_unwanted + full element scan
+    """The reference's cleanDocument + discardUnwanted + full element scan
     fused into one DFS (utils.go:32-60, extractors.go:36-46): pruned
     subtrees are detached and never visited, survivors come back in
     document order. Identical result to running the three passes — the

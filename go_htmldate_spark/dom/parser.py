@@ -18,7 +18,7 @@ go-shiori/dom):
 from __future__ import annotations
 
 from html.parser import HTMLParser
-from typing import Iterator, Optional
+from typing import Optional
 
 VOID_ELEMENTS = frozenset(
     "area base br col embed hr img input keygen link meta param source track wbr".split()
@@ -258,12 +258,6 @@ def render_children(node: Node, out: list[str]) -> None:
         out.append(">")
         stack.append(f"</{item.tag}>")
         stack.extend(reversed(item.children))
-
-
-def render_node(node: Node, out: list[str]) -> None:
-    wrapper = Node(ELEMENT, "#wrap")
-    wrapper.children = [node]  # no reparenting; render only
-    render_children(wrapper, out)
 
 
 def inner_html(node: Node) -> str:

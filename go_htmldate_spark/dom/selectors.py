@@ -7,7 +7,7 @@ id is empty, itemprop only when both are (date.go:61-106).
 
 from __future__ import annotations
 
-from .parser import ELEMENT, TEXT, Node
+from .parser import Node
 
 _FAST_TAGS = frozenset(["div", "h2", "h3", "h4", "li", "p", "span", "time", "ul"])
 _FREE_TEXT_TAGS = _FAST_TAGS
@@ -103,17 +103,3 @@ def discard_rule(n: Node) -> bool:  # discard.go:9-22 (archive.org banner)
 def free_text_rule(n: Node) -> bool:  # free-text.go:9-16
     return n.tag in _FREE_TEXT_TAGS
 
-
-def query_all(root: Node, rule) -> list[Node]:  # selector.go:21-29
-    return [e for e in root.iter_elements() if rule(e)]
-
-
-def query_all_text_nodes(root: Node, rule) -> list[Node]:  # selector.go:33-47
-    matches: list[Node] = []
-    for e in root.iter_elements():
-        if not rule(e):
-            continue
-        for child in e.children:
-            if child.kind == TEXT and child.data != "":
-                matches.append(child)
-    return matches

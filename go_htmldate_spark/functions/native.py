@@ -3,8 +3,7 @@
 These mirror kernels from dateparse.py as whole-stage-codegen'd Spark
 expressions so Catalyst can run them without Python. Used for the
 staged fast path (URL dates resolve engine-side; the expensive pandas
-UDF only sees unresolved rows — SURVEY.md §4.1) and for the
-oracle-checkable relational operators.
+UDF only sees unresolved rows — SURVEY.md §4.1).
 """
 
 from __future__ import annotations

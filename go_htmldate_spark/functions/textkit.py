@@ -36,11 +36,6 @@ def digit_count(s: str) -> int:
     return len(_RX_ND.findall(s))
 
 
-def is_ascii_digits(b: bytes) -> bool:
-    """True if all bytes are ASCII digits and non-empty."""
-    return b.isdigit()
-
-
 def atoi(s) -> int:
     """Go strconv.Atoi semantics used by the reference: callers ignore the
     error and use the zero value on failure (e.g. extractors.go:58-60)."""

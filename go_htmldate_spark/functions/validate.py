@@ -3,13 +3,12 @@
 Pins the semantics of /root/reference/validators.go and the candidate
 disambiguation in /root/reference/core.go:823-930. These are the
 "relational" pieces of the cascade (group-count, top-k, stable sorts),
-run batch-side inside the pandas UDF; engine-side SQL equivalents are
-exposed in operators/relational.py.
+run batch-side inside the pandas UDF.
 """
 
 from __future__ import annotations
 
-from datetime import date, datetime, timedelta, timezone
+from datetime import date, datetime, timezone
 from typing import Callable, NamedTuple, Optional
 
 from ..options import Options
@@ -273,6 +272,3 @@ def search_pattern(
     candidates = plausible_year_filter(html_string, finder, rx_year, False, opts)
     return select_candidate(candidates, rx_catch, rx_year, opts)
 
-
-def unix_to_utc_datetime(reference: int) -> datetime:
-    return datetime(1970, 1, 1, tzinfo=timezone.utc) + timedelta(seconds=reference)

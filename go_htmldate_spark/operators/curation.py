@@ -123,25 +123,6 @@ def ngram_contamination(
     )
 
 
-def decontaminate(
-    docs: DataFrame,
-    benchmark: DataFrame,
-    max_frac: float = 0.05,
-    n: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    **kwargs,
-) -> DataFrame:
-    """Drop documents whose benchmark n-gram contamination exceeds
-    max_frac; docs with no n-grams (shorter than n words) are kept."""
-    contam = ngram_contamination(
-        docs, benchmark, n=n, text_col=text_col, id_col=id_col, **kwargs
-    ).filter(F.col("contamination_frac") > max_frac)
-    return docs.join(
-        contam.select(id_col), id_col, "left_anti"
-    )
-
-
 # ---------------------------------------------------------------------------
 # PII scrubbing (the redaction staple of web-text pipelines)
 # ---------------------------------------------------------------------------

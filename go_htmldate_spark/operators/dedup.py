@@ -514,24 +514,6 @@ def incremental_dedup(
     )
 
 
-def minhash_jaccard_estimate(
-    signatures: DataFrame, pairs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """Estimated Jaccard from signature agreement for candidate pairs."""
-    sa = signatures.select(F.col(id_col).alias("a"), F.col("minhash").alias("sig_a"))
-    sb = signatures.select(F.col(id_col).alias("b"), F.col("minhash").alias("sig_b"))
-    joined = pairs.join(sa, "a").join(sb, "b")
-    agree = F.size(
-        F.filter(
-            F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda x, y: x == y),
-            lambda eq: eq,
-        )
-    )
-    return joined.select(
-        "a", "b", (agree.cast("double") / F.size("sig_a")).alias("est_jaccard")
-    )
-
-
 # ---------------------------------------------------------------------------
 # SimHash
 # ---------------------------------------------------------------------------
@@ -796,66 +778,9 @@ def connected_components(
     return labels
 
 
-def semantic_dedup(
-    embeddings: DataFrame,
-    dim: int,
-    min_cosine: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    **ann_kwargs,
-) -> DataFrame:
-    """Embedding-cosine near-dup removal: ANN self-join → connected
-    components → keep only the smallest id of each component (plus all
-    singletons). Returns the deduplicated embeddings table."""
-    from .similarity import ann_selfjoin_pairs
-
-    pairs = ann_selfjoin_pairs(
-        embeddings, dim=dim, min_cosine=min_cosine,
-        id_col=id_col, vec_col=vec_col, **ann_kwargs,
-    )
-    comps = connected_components(pairs)
-    losers = comps.filter(F.col("id") != F.col("comp")).select(
-        F.col("id").alias(id_col)
-    )
-    return embeddings.join(losers, id_col, "left_anti")
-
-
 # ---------------------------------------------------------------------------
 # n-gram Jaccard (exact, for candidate verification / small scopes)
 # ---------------------------------------------------------------------------
-
-def token_jaccard_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    key_col: str = "source",
-    min_jaccard: float = 0.5,
-) -> DataFrame:
-    """Exact distinct-token Jaccard for pairs sharing `key_col` (co-group
-    key bounds the quadratic blowup; at scale the key is an LSH bucket)."""
-    toks = df.select(
-        F.col(id_col),
-        F.col(key_col),
-        F.array_distinct(
-            F.split(F.lower(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " "))), " ")
-        ).alias("toks"),
-    )
-    a = toks.select(
-        F.col(key_col), F.col(id_col).alias("a"), F.col("toks").alias("toks_a")
-    )
-    b = toks.select(
-        F.col(key_col), F.col(id_col).alias("b"), F.col("toks").alias("toks_b")
-    )
-    pairs = a.join(b, key_col).filter(F.col("a") < F.col("b"))
-    inter = F.size(F.array_intersect("toks_a", "toks_b"))
-    union = F.size("toks_a") + F.size("toks_b") - inter
-    jac = F.when(union > 0, inter.cast("double") / union.cast("double")).otherwise(
-        F.lit(0.0)
-    )
-    return pairs.select(
-        "a", "b", F.round(jac, 6).alias("jaccard")
-    ).filter(F.col("jaccard") >= min_jaccard)
-
 
 # broadcast budget for the verify token sets: total corpus TEXT bytes
 # held driver-side (bytes bound the token count; probing bytes needs

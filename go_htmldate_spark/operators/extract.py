@@ -12,7 +12,7 @@ UDFs are opaque to it.
 from __future__ import annotations
 
 import re
-from typing import Iterator, Optional
+from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -29,6 +29,7 @@ from pyspark.sql.types import (
 from ..cascade import EMPTY_RESULT, from_html
 from ..functions.native import normalize_spaces_col, url_date
 from ..options import Options
+from ..plans.canonical import url_host
 
 RESULT_SCHEMA = StructType(
     [
@@ -238,3 +239,37 @@ def extract_dates(
 
     combined = F.when(native_ok, native).otherwise(res)
     return pages.withColumn("_r", combined).select("*", "_r.*").drop("_r")
+
+
+def host_fetch_rates(pages: DataFrame, window: str = "10 minutes",
+                     watermark: str = "20 minutes",
+                     opts: Options | None = None) -> DataFrame:
+    """Event-time windowed per-host fetch/extraction rates with a
+    watermark for late WARC records (crawl telemetry the politeness
+    budget consumes). Works identically on a batch or streaming
+    DataFrame — on a stream the watermark bounds window state: windows
+    older than max(warc_ts) - watermark are finalized and dropped from
+    the state store, and later-arriving rows for them are discarded
+    (state is O(open windows × hosts), not O(history)).
+
+    Shuffle shape: one hash partition on (window, host) — the same
+    single-exchange aggregation whether batch or micro-batch."""
+    dated = extract_dates(pages, opts or Options()).select(
+        "url", "warc_ts", (F.col("date") != "").alias("dated")
+    )
+    return (
+        dated.withWatermark("warc_ts", watermark)
+        .groupBy(
+            F.window("warc_ts", window).alias("win"),
+            url_host(F.col("url")).alias("host"),
+        )
+        .agg(
+            F.count("*").alias("n_fetched"),
+            F.sum(F.col("dated").cast("long")).alias("n_dated"),
+        )
+        .select(
+            F.col("win.start").alias("win_start"),
+            F.col("win.end").alias("win_end"),
+            "host", "n_fetched", "n_dated",
+        )
+    )

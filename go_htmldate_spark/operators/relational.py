@@ -1,70 +1,12 @@
-"""Relational operators from the reference cascade, engine-side.
-
-Each function maps one SURVEY.md §2 operator onto native DataFrame ops
-over arbitrary tables, so the semantics the reference buries inside its
-per-document loop (frequency counting, top-k disambiguation, min/max
-reference folds, anti-join dedup, 2-digit-year completion) are
-available as scalable, oracle-checkable engine primitives.
+"""Relational operators from the reference tooling, engine-side: the
+evaluation harness's confusion-matrix scoring as one native DataFrame
+aggregation.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..functions.native import correct_year_col
-
-
-def match_frequency(
-    df: DataFrame, value_col: str, raw_col: str | None = None
-) -> DataFrame:
-    """Group identical matches, count occurrences, keep first raw string —
-    the yearCandidate aggregation (validators.go:131-150)."""
-    aggs = [F.count("*").alias("n")]
-    if raw_col:
-        aggs.append(F.min(raw_col).alias("raw"))
-    return df.groupBy(F.col(value_col).alias("pattern")).agg(*aggs)
-
-
-def candidate_topk(
-    df: DataFrame,
-    value_col: str,
-    k: int = 10,
-    newest_first: bool = True,
-) -> DataFrame:
-    """Top-k by count with chronological tiebreak — the selectCandidate
-    ordering (core.go:838-856) as a window rank."""
-    counted = df.groupBy(F.col(value_col).alias("pattern")).agg(
-        F.count("*").alias("n")
-    )
-    order = [F.desc("n"), F.desc("pattern") if newest_first else F.asc("pattern")]
-    w = Window.orderBy(*order)
-    return (
-        counted.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
-
-
-def minmax_reference(
-    df: DataFrame, key_col: str, ts_col: str, use_original: bool = True
-) -> DataFrame:
-    """Running min (original) / max (updated) per key — compareValues as
-    an aggregation (validators.go:94-105)."""
-    agg = F.min(ts_col) if use_original else F.max(ts_col)
-    return df.groupBy(key_col).agg(agg.alias("ref_ts"))
-
-
-def anti_join_seen(
-    candidates: DataFrame, seen: DataFrame, key: str
-) -> DataFrame:
-    """Drop already-seen keys — the URL-seen anti-join [north-rule]."""
-    return candidates.join(seen, on=key, how="left_anti")
-
-
-def complete_two_digit_years(df: DataFrame, year_col: str) -> DataFrame:
-    """2-digit year completion ≥90→19xx else 20xx (extractors.go:429-439)."""
-    y = F.col(year_col).cast("int")
-    return df.withColumn("year_completed", correct_year_col(y))
 
 
 def eval_scores(

@@ -102,36 +102,6 @@ def brute_force_topk(
     )
 
 
-def _hyperplane(dim: int, plane: int) -> Column:
-    """Deterministic pseudo-random hyperplane: component j of plane p is
-    a hash-derived value in [-1, 1)."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(dim - 1)),
-        lambda j: (
-            F.pmod(F.xxhash64(F.lit(plane), j), F.lit(20000)).cast("double")
-            / F.lit(10000.0)
-            - F.lit(1.0)
-        ),
-    )
-
-
-def lsh_signature(vec: Column, dim: int, n_planes: int = 16, table: int = 0) -> Column:
-    """Sign-bit signature as a long (random-hyperplane LSH); shift-free
-    acc*2+bit fold so no constant-only shift wrappers are needed. `table`
-    selects an independent plane set (multi-table OR-amplification)."""
-    bits = F.transform(
-        F.sequence(F.lit(0), F.lit(n_planes - 1)),
-        lambda p: F.when(
-            dot(vec, _hyperplane_from(p + table * 1009, dim)) >= 0, F.lit(1)
-        ).otherwise(F.lit(0)),
-    )
-    return F.aggregate(
-        F.reverse(bits),
-        F.lit(0).cast("long"),
-        lambda acc, bit: acc * 2 + bit,
-    )
-
-
 def _hyperplane_from(p: Column, dim: int) -> Column:
     return F.transform(
         F.sequence(F.lit(0), F.lit(dim - 1)),
@@ -281,7 +251,7 @@ def ann_selfjoin_pairs(
         sigs = F.array(*[_sign_bits(vec, tplanes(t)) for t in range(n_tables)])
     else:
         def sig_fold(t: int) -> Column:
-            # lsh_signature's exact integer fold: reverse-bit acc*2+bit
+            # exact integer fold: reverse-bit acc*2+bit
             acc = F.lit(0).cast("long")
             for pl in reversed(tplanes(t)):
                 acc = acc * 2 + F.when(dot(vec, pl) >= 0, F.lit(1)).otherwise(
@@ -448,53 +418,6 @@ def _bucket_pairs_prefiltered(
         banded.sparkSession.sparkContext.defaultParallelism
     )
     return sel.mapInPandas(gen, "a long, b long").distinct()
-
-
-def ann_topk(
-    embeddings: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 4,
-    n_tables: int = 16,
-) -> DataFrame:
-    """Approximate top-k via multi-table hyperplane LSH (OR-amplified):
-    a row is a candidate if ANY of its n_tables signatures matches the
-    query's. Candidates are exactly reranked by cosine. At 100 TB the
-    signatures are precomputed columns and the table is bucketed by them,
-    turning the probe into partition-pruned scans.
-
-    Collision prob per table is (1-θ/π)^n_planes: the defaults (4×16)
-    target low-similarity regimes (cos≈0.3 neighbors, like this synthetic
-    corpus); clustered real embeddings afford more planes / fewer tables
-    for a smaller scan fraction."""
-    dim = len(query_vec)
-    vec = F.col(vec_col).cast("array<double>")
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-
-    sigs = F.array(
-        *[lsh_signature(vec, dim, n_planes, table=t) for t in range(n_tables)]
-    )
-    qsigs = F.array(
-        *[lsh_signature(q, dim, n_planes, table=t) for t in range(n_tables)]
-    )
-    tagged = embeddings.select(F.col(id_col), vec.alias("v"), sigs.alias("sigs"))
-    qdf = tagged.sparkSession.range(1).select(qsigs.alias("qsigs"))
-
-    candidates = tagged.join(F.broadcast(qdf)).filter(
-        F.exists(
-            F.zip_with(F.col("sigs"), F.col("qsigs"), lambda a, b: a == b),
-            lambda x: x,
-        )
-    )
-    return (
-        candidates.select(
-            F.col(id_col), F.round(cosine(F.col("v"), q), 6).alias("cosine")
-        )
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
-    )
 
 
 # ---------------------------------------------------------------------------

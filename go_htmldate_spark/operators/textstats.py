@@ -43,26 +43,6 @@ def bpe_ish_token_count(text: Column) -> Column:
     )
 
 
-def punct_ratio(text: Column) -> Column:
-    n = F.length(text)
-    punct = n - F.length(F.regexp_replace(text, r"[\pP]", ""))
-    return F.when(n > 0, punct.cast("double") / n.cast("double")).otherwise(F.lit(0.0))
-
-
-def stopword_ratio(text: Column) -> Column:
-    toks = tokens(F.lower(text))
-    n = F.size(toks)
-    hits = F.size(F.filter(toks, lambda t: t.isin(STOPWORDS)))
-    return F.when(n > 0, hits.cast("double") / n.cast("double")).otherwise(F.lit(0.0))
-
-
-def mean_word_len(text: Column) -> Column:
-    toks = tokens(text)
-    n = F.size(toks)
-    total = F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
-    return F.when(n > 0, total.cast("double") / n.cast("double")).otherwise(F.lit(0.0))
-
-
 def text_stats_struct(text: Column) -> Column:
     """All token-derived counters in ONE pass: a single aggregate() fold
     with a struct accumulator. Interpreted HOFs get no common-subexpression
@@ -99,12 +79,6 @@ def quality_from_stats(s: Column) -> Column:
     punct_penalty = F.greatest(F.lit(0.0), F.lit(1.0) - punct * 4)
     wl_score = F.when((wl >= 3) & (wl <= 10), F.lit(1.0)).otherwise(F.lit(0.5))
     return F.round(len_score * punct_penalty * wl_score, 6)
-
-
-def quality_score(text: Column) -> Column:
-    """Composite [0,1] quality heuristic: long enough, not punctuation
-    soup, reasonable word lengths."""
-    return quality_from_stats(text_stats_struct(text))
 
 
 def _marker_pred(markers: list[str]):

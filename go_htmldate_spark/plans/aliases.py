@@ -127,44 +127,6 @@ def meta_refresh_edges(
     )
 
 
-def amphtml_edges(
-    pages: DataFrame, url_col: str = "url", html_col: str = "html"
-) -> DataFrame:
-    """pages → (src_url, dst_url) edges to the page's declared AMP
-    variant (`<link rel="amphtml" href>`) — alias edges in the
-    rel_canonical currency, pointing canonical → variant."""
-    from .pagination import link_rel_edges
-
-    return link_rel_edges(pages, "amphtml", url_col, html_col)
-
-
-def og_url_edges(
-    pages: DataFrame, url_col: str = "url", html_col: str = "html"
-) -> DataFrame:
-    """pages → (src_url, dst_url) edges where the page's og:url
-    differs from the fetched URL — the OpenGraph self-declared
-    canonical as an alias signal; self-matches (the normal case)
-    carry no information and drop."""
-    staged = _with_origin(pages, url_col, html_col)
-    tags = F.regexp_extract_all(F.col("_h"), F.lit(_META_TAG_RX), F.lit(0))
-    og = F.filter(tags, lambda t: t.rlike(_OG_URL_RX))
-    content = F.get(F.transform(og, _content_of), 0)
-    # stage the extracted content before _resolve: resolve references
-    # its href argument several times, and inlined each reference
-    # re-evaluates the whole tag-scan chain
-    staged = staged.select(
-        "src_url", "_scheme", "_host", content.alias("_c")
-    )
-    dst = _resolve(F.col("_c"), F.col("_scheme"), F.col("_host"))
-    return (
-        staged.select("src_url", dst.alias("dst_url"))
-        .filter(
-            F.col("dst_url").isNotNull()
-            & (F.col("dst_url") != F.col("src_url"))
-        )
-    )
-
-
 def page_alias_edges(
     pages: DataFrame, url_col: str = "url", html_col: str = "html"
 ) -> DataFrame:
@@ -256,44 +218,8 @@ def page_alias_edges(
 # must be present — the m-dot mobile-variant declaration
 _REL_ALT_RX = r"(?i)\brel\s*=\s*['\"]?alternate(?:['\"]|[\s>])"
 _MEDIA_RX = r"(?i)\bmedia\s*=\s*['\"]?[^>]*max-width"
-_LINK_TAG_RX = r"(?i)<link\s[^>]*>"
 _HREF_Q_RX = r"""(?i)\bhref\s*=\s*(["'])((?:(?!\1)[^>])*)\1"""
 _HREF_U_RX = r"""(?i)\bhref\s*=\s*([^'" >]+)"""
-
-
-def mobile_alternate_edges(
-    pages: DataFrame, url_col: str = "url", html_col: str = "html"
-) -> DataFrame:
-    """pages → (src_url, dst_url) edges to the page's declared MOBILE
-    variant (`<link rel="alternate" media="...max-width..." href>`,
-    the m-dot pattern): a near-duplicate alias exactly like AMP — the
-    m.example.com copy should not cost a second frontier slot or a
-    second training document. Map-only tag scan; hreflang-carrying
-    alternates are translation variants, not mobile aliases, and are
-    excluded (plans/hreflang.py owns them)."""
-    staged = _with_origin(pages, url_col, html_col)
-    tags = F.regexp_extract_all(F.col("_h"), F.lit(_LINK_TAG_RX), F.lit(0))
-    mob = F.filter(
-        tags,
-        lambda t: t.rlike(_REL_ALT_RX) & t.rlike(_MEDIA_RX)
-        & ~t.rlike(r"(?i)\bhreflang\s*="),
-    )
-    href = F.get(F.transform(mob, lambda t: F.coalesce(
-        F.nullif(F.regexp_extract(t, _HREF_Q_RX, 2), F.lit("")),
-        F.nullif(F.regexp_extract(t, _HREF_U_RX, 1), F.lit("")),
-    )), 0)
-    # stage before _resolve (multi-reference — see og_url_edges)
-    staged = staged.select(
-        "src_url", "_scheme", "_host", href.alias("_href")
-    )
-    dst = _resolve(F.col("_href"), F.col("_scheme"), F.col("_host"))
-    return (
-        staged.select("src_url", dst.alias("dst_url"))
-        .filter(
-            F.col("dst_url").isNotNull()
-            & (F.col("dst_url") != F.col("src_url"))
-        )
-    )
 
 
 def alias_redirect_edges(

@@ -663,21 +663,6 @@ def focused_host_relevance(
     )
 
 
-def relevance_to_budget(
-    relevance: DataFrame, lo: float = 1.0, hi: float = 8.0
-) -> DataFrame:
-    """(host, relevance∈[0,1]) → (host, politeness_budget): the linear
-    bridge onto [lo, hi] for CrawlScheduler(host_budget=…) — unlike
-    rank_to_budget's log map, relevance is already a bounded share, so
-    an off-topic host gets the floor and a fully on-topic host the
-    ceiling. Map-only, one row per host."""
-    return relevance.select(
-        "host",
-        (F.lit(lo) + F.lit(hi - lo) * F.col("relevance"))
-        .alias("politeness_budget"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # TrustRank (Gyöngyi/Garcia-Molina/Pedersen, VLDB'04) — spam demotion
 # ---------------------------------------------------------------------------

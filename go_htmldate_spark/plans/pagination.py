@@ -110,12 +110,6 @@ def rel_next_edges(pages: DataFrame, url_col: str = "url",
     return link_rel_edges(pages, "next", url_col, html_col)
 
 
-def rel_prev_edges(pages: DataFrame, url_col: str = "url",
-                   html_col: str = "html") -> DataFrame:
-    """`<link rel="prev">` backward edges (src_url, dst_url)."""
-    return link_rel_edges(pages, "prev", url_col, html_col)
-
-
 _PAGINATION_EDGE_CAP = 500_000
 
 

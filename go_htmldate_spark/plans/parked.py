@@ -149,35 +149,6 @@ def parked_host_stats(
     )
 
 
-def parked_demotion(
-    budgets: DataFrame,
-    host_stats: DataFrame,
-    max_rate: float = 0.8,
-    budget_col: str = "politeness_budget",
-    demoted_budget: float = 0.0,
-) -> DataFrame:
-    """Overwrite the budget of hosts whose parked rate crosses
-    ``max_rate`` with ``demoted_budget`` (0 = never scheduled).  The
-    row must be OVERWRITTEN, not dropped: the scheduler coalesces
-    hosts missing from the budget table to its default budget, so a
-    left-anti drop would hand a demoted host MORE budget than the 0.5
-    it arrived with.  Budgets never shuffle — the flagged-host set is
-    O(hosts) and broadcast."""
-    bad = F.broadcast(
-        host_stats.filter(F.col("parked_rate") >= max_rate)
-        .select("host").withColumn("_parked", F.lit(True))
-    )
-    return budgets.join(bad, "host", "left").select(
-        *[
-            F.when(F.col("_parked").isNotNull(),
-                   F.lit(float(demoted_budget))).otherwise(F.col(c)).alias(c)
-            if c == budget_col
-            else F.col(c)
-            for c in budgets.columns
-        ]
-    )
-
-
 def parked_budget_demotion(
     host_stats: DataFrame,
     threshold: float = 0.8,

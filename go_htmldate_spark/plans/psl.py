@@ -175,21 +175,3 @@ def registrable_py(host: str, rules=MINI_PSL) -> str:
         return ".".join(labels[-(depth + 1):])
     return ".".join(labels)
 
-
-def registrable_rollup(
-    df: DataFrame, host_col: str = "host", rules=MINI_PSL
-) -> DataFrame:
-    """Hosts per registrable domain — the grouping the scheduler uses
-    to share one politeness budget across a site's shards (www/img1/
-    img2) while keeping platform tenants (*.github.io) separate. One
-    partial-aggregated exchange over O(hosts) rows."""
-    return (
-        with_registrable(df.select(F.col(host_col).alias("host")), "host",
-                         rules)
-        .filter(F.col("registrable_domain").isNotNull())
-        .groupBy("registrable_domain")
-        .agg(
-            F.countDistinct("host").cast("long").alias("n_hosts"),
-            F.count("*").cast("long").alias("n_rows"),
-        )
-    )

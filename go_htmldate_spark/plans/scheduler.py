@@ -73,14 +73,13 @@ class CrawlConfig:
     round_seconds: float = 60.0
     # "broadcast": stream the full-payload corpus, hash-probe the small
     # scheduled side (corpus html never shuffles — the 100 TB-safe shape).
-    # "shuffle_hash" is the fallback when a round schedules more rows
-    # than fit in a broadcast (then prefer a corpus bucketed on url).
+    # "bucketed": the corpus is a table bucketed on url_canon
+    # (write_bucketed_corpus) — for rounds that schedule more rows than
+    # fit in a broadcast. Any other value raises (fetch_join).
     fetch_join: str = "broadcast"
-    # URL-seen pre-filter family: "bloom" (plans/bloom.py) or "cuckoo"
-    # (plans/cuckoo.py — deletion-capable, denser at equal FPP). Both are
-    # advisory; the exact anti-join backstop owns correctness.
-    seen_filter: str = "bloom"
-    cuckoo_buckets: int = 1 << 15
+    # The URL-seen pre-filter is the partitioned bloom family
+    # (plans/bloom.py, n_bloom_partitions × bloom_bits); it is advisory —
+    # the exact anti-join backstop owns correctness.
     # URL-seen state maintenance: each round appends ONLY that round's
     # scheduled hashes as a flat (unpartitioned) parquet delta of
     # ceil(rows / SEEN_ROWS_PER_FILE) files (write volume O(new), not
@@ -160,9 +159,7 @@ def fetch_join(corpus: DataFrame, sched_keys: DataFrame, mode: str = "broadcast"
     url_canon (write_bucketed_corpus) — only the scheduled side is
     exchanged/sorted to the bucket count, the corpus scans in place;
     the right shape when a round schedules more rows than fit in a
-    broadcast. shuffle_hash: last-resort fallback for an unbucketed
-    corpus + huge scheduled set; build on the scheduled side, stream
-    the corpus (never sort-merge there — it would sort the payload)."""
+    broadcast. Any other mode raises ValueError."""
     if mode == "broadcast":
         return corpus.join(
             F.broadcast(sched_keys), sched_keys["url"] == corpus["url_canon"], "inner"
@@ -173,8 +170,8 @@ def fetch_join(corpus: DataFrame, sched_keys: DataFrame, mode: str = "broadcast"
         return corpus.join(
             sched_keys, sched_keys["url"] == corpus["url_canon"], "inner"
         )
-    return sched_keys.hint("shuffle_hash").join(
-        corpus, sched_keys["url"] == corpus["url_canon"], "inner"
+    raise ValueError(
+        f"fetch_join mode {mode!r}: expected 'broadcast' or 'bucketed'"
     )
 
 
@@ -477,46 +474,6 @@ class CrawlScheduler:
             )
         self._host_dim = dim.cache() if dim is not None else None
 
-    # -- seen-filter family dispatch ----------------------------------------
-    def _filter_fns(self):
-        cfg = self.config
-        if cfg.seen_filter == "cuckoo":
-            from .cuckoo import (
-                SLOTS,
-                build_cuckoo,
-                merge_cuckoo,
-                probe_cuckoo,
-                probe_cuckoo_cogrouped,
-            )
-
-            # same size switch as the bloom family: past the broadcast
-            # budget the cogrouped probe keeps every shard executor-side
-            # (the driver never holds P × B × S bytes)
-            state_bytes = cfg.n_bloom_partitions * cfg.cuckoo_buckets * SLOTS
-            cuckoo_probe = (
-                probe_cuckoo_cogrouped
-                if state_bytes > cfg.bloom_broadcast_max_bytes
-                else probe_cuckoo
-            )
-            return (
-                lambda df: build_cuckoo(df, cfg.n_bloom_partitions, cfg.cuckoo_buckets),
-                lambda a, b: merge_cuckoo(a, b, cfg.cuckoo_buckets),
-                lambda cand, st: cuckoo_probe(
-                    cand, st, cfg.n_bloom_partitions, cfg.cuckoo_buckets
-                ),
-            )
-        state_bytes = cfg.n_bloom_partitions * (cfg.bloom_bits // 8)
-        probe = (
-            probe_blooms_cogrouped
-            if state_bytes > cfg.bloom_broadcast_max_bytes
-            else probe_blooms
-        )
-        return (
-            lambda df: build_blooms(df, cfg.n_bloom_partitions, cfg.bloom_bits),
-            merge_blooms,
-            lambda cand, st: probe(cand, st, cfg.n_bloom_partitions, cfg.bloom_bits),
-        )
-
     # -- state bootstrap ---------------------------------------------------
     def init_from_seeds(self, seeds: DataFrame) -> None:
         """seeds(url, priority)"""
@@ -539,8 +496,9 @@ class CrawlScheduler:
             )
         )
         self.seen = self.spark.createDataFrame([], "url_hash long")
-        build, _, _ = self._filter_fns()
-        self.blooms = build(self.spark.createDataFrame([], "url_hash long"))
+        self.blooms = build_blooms(
+            self.seen, self.config.n_bloom_partitions, self.config.bloom_bits
+        )
         self._seen_count = 0
         self._seen_chain: list[str] = []  # relative dirs under state_dir
         self.round = 0
@@ -656,15 +614,22 @@ class CrawlScheduler:
                 .drop("signature", "yield")
             )
 
-        # 2. URL-seen: bloom/cuckoo pre-filter (once the seen set is big
+        # 2. URL-seen: bloom pre-filter (once the seen set is big
         # enough to be worth it), exact anti-join backstop either way.
         # The bloom probe variant is picked by state size: small states
         # broadcast from the driver; past bloom_broadcast_max_bytes the
         # cogrouped path keeps all shards executor-side (the driver never
         # holds P × m/8 bytes).
-        build_filter, merge_filter, probe_filter = self._filter_fns()
         if self._seen_count >= cfg.bloom_min_seen:
-            probed = probe_filter(pending, self.blooms)
+            probe = (
+                probe_blooms_cogrouped
+                if cfg.n_bloom_partitions * (cfg.bloom_bits // 8)
+                > cfg.bloom_broadcast_max_bytes
+                else probe_blooms
+            )
+            probed = probe(
+                pending, self.blooms, cfg.n_bloom_partitions, cfg.bloom_bits
+            )
             definitely_new = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
             maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
             confirmed_new = maybe.join(self.seen, "url_hash", "left_anti")
@@ -993,12 +958,15 @@ class CrawlScheduler:
         # the exact n_scheduled is free from the observation.
         if n_seen >= cfg.bloom_min_seen:
             if self._seen_count < cfg.bloom_min_seen:
-                new_blooms = build_filter(  # first crossing: full rebuild
-                    self._seen_from_chain(self._seen_chain)
+                new_blooms = build_blooms(  # first crossing: full rebuild
+                    self._seen_from_chain(self._seen_chain),
+                    cfg.n_bloom_partitions, cfg.bloom_bits,
                 )
             else:
-                new_blooms = merge_filter(
-                    self.blooms, build_filter(scheduled.select("url_hash"))
+                new_blooms = merge_blooms(
+                    self.blooms,
+                    build_blooms(scheduled.select("url_hash"),
+                                 cfg.n_bloom_partitions, cfg.bloom_bits),
                 )
         else:
             new_blooms = self.blooms

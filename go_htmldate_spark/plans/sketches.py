@@ -38,9 +38,7 @@ under any partitioning and replayable in portable SQL:
    the exchange: the shuffle payload is O(partitions x d x w)
    REGARDLESS of input size, and sketches from two logs merge by
    cell-wise addition.  Point estimates min over the d rows
-   (one-sided: est >= true count, est <= true + e*N/w w.p. 1-2^-d);
-   ``cms_heavy_hitters`` screens candidate hosts against phi*N so the
-   exact (and expensive) count runs only on the survivors.
+   (one-sided: est >= true count, est <= true + e*N/w w.p. 1-2^-d).
 
 Reference: no analog (go-htmldate has no frontier); the sketches feed
 the same budget tables (plans/budget.py, plans/scheduler.py step 5)
@@ -102,24 +100,14 @@ def hll_registers(
 ) -> DataFrame:
     """Per-key HLL register table (key, register, rho) — at most 2^p
     rows per key, max-combined map-side so the exchange never carries
-    items.  Mergeable: union two register tables and re-aggregate
-    (``hll_merge``) — max is idempotent/associative/commutative."""
+    items.  Mergeable: union two register tables and re-aggregate by
+    max — max is idempotent/associative/commutative."""
     idx, rho = hll_register_cols(F.col(item_col), p=p)
     return (
         df.select(F.col(key_col).alias("key"), idx, rho)
         .groupBy("key", "register")
         .agg(F.max("rho").alias("rho"))
     )
-
-
-def hll_merge(*register_tables: DataFrame) -> DataFrame:
-    """Union register tables from independent sketches (e.g. two crawl
-    snapshots) into one — O(registers) work, no item re-scan."""
-    it = iter(register_tables)
-    out = next(it)
-    for t in it:
-        out = out.unionByName(t)
-    return out.groupBy("key", "register").agg(F.max("rho").alias("rho"))
 
 
 def hll_estimate(registers: DataFrame, p: int = 8) -> DataFrame:
@@ -211,7 +199,7 @@ def cms_build(
     map-side and the partial sum collapses each partition to <= d*w
     rows before the ONE exchange — shuffle payload is O(partitions x
     d x w) whatever the input size.  Merge two sketches by unioning
-    and re-summing (``cms_merge``)."""
+    and re-summing."""
     weight = (
         F.col(weight_col).cast("long") if weight_col else F.lit(1).cast("long")
     )
@@ -227,15 +215,6 @@ def cms_build(
         .groupBy("row", "col")
         .agg(F.sum("_w").alias("cnt"))
     )
-
-
-def cms_merge(*sketches: DataFrame) -> DataFrame:
-    """Cell-wise sum of CM sketches built with the same (d, w)."""
-    it = iter(sketches)
-    out = next(it)
-    for s in it:
-        out = out.unionByName(s)
-    return out.groupBy("row", "col").agg(F.sum("cnt").alias("cnt"))
 
 
 def cms_point_estimate(
@@ -261,22 +240,3 @@ def cms_point_estimate(
         .agg(F.min(F.coalesce("cnt", F.lit(0).cast("long"))).alias("est_count"))
     )
 
-
-def cms_heavy_hitters(
-    sketch: DataFrame,
-    candidates: DataFrame,
-    total: int,
-    phi: float,
-    key_col: str = "host",
-    d: int = 4,
-    w: int = 1024,
-) -> DataFrame:
-    """Candidates whose CM estimate clears phi * total — the cheap
-    screen in front of an exact heavy-host count (one-sided, so no
-    true heavy hitter is ever screened out).  Feeds the scheduler's
-    skew-salting trigger without a full host groupBy."""
-    est = cms_point_estimate(sketch, candidates, key_col=key_col, d=d, w=w)
-    threshold = int(math.ceil(phi * total))
-    return est.filter(F.col("est_count") >= threshold).select(
-        "key", "est_count"
-    )

@@ -20,9 +20,8 @@ fetched corpus is the two-signal version implemented here:
    is on (host, md5(content)) so page bytes never shuffle, mirroring
    the mirror-host and DUST passes.
 
-`soft404_filter` drops flagged pages; the signals stay separate
-columns so a scheduler can also demote the host (many templates ⇒
-aggressive rewriter) rather than just skip the page.
+The signals stay separate columns so a scheduler can demote the host
+(many templates ⇒ aggressive rewriter) rather than just skip the page.
 
 Reference: no analog (go-htmldate extracts dates from whatever page it
 is handed); this is crawl-waste armor for the frontier tier, same
@@ -53,75 +52,6 @@ ERROR_PHRASES = (
 _ERR_RX = "(?i)(" + "|".join(p.replace(" ", "\\s+") for p in ERROR_PHRASES) + ")"
 
 
-def soft404_flags(
-    df: DataFrame,
-    url_col: str = "url",
-    text_col: str = "text",
-    max_tokens: int = 40,
-    head_chars: int = 400,
-    min_template_urls: int = 5,
-) -> DataFrame:
-    """Append soft-404 signal columns to a fetched-pages frame.
-
-    Output columns:
-      err_phrase    — error phrase in the first `head_chars` chars
-      tiny_body     — whitespace-token count <= max_tokens
-      template_err  — the page's (host, md5(text)) group spans
-                      >= min_template_urls distinct urls AND is tiny
-      soft404       — (err_phrase AND tiny_body) OR template_err
-
-    Scale shape: err_phrase/tiny_body are codegen'd string expressions
-    on the scan — zero exchanges. The template pass shuffles only
-    (host, 16-byte md5, url) triples to count distinct urls per
-    content group; the handful of groups over the threshold join back
-    broadcast-sized under AQE. Page text itself never enters an
-    exchange."""
-    # null text reads as empty: otherwise every flag is null and
-    # filter(~soft404) silently drops the page while host_stats'
-    # sum(soft404) skips it against a count(*) that includes it —
-    # diluting a host's rate with pages that were never even judged
-    txt = F.coalesce(F.col(text_col), F.lit(""))
-    head = F.substring(txt, 1, head_chars)
-    # rlike matches-or-not is all the flag needs (same regex engine,
-    # same truth value as regexp_extract != '' — the phrase alternation
-    # cannot match empty), and it short-circuits on the first hit
-    err = head.rlike(_ERR_RX)
-    # token count via split-size (regexp_count was A/B'd slower here —
-    # per-match regex overhead beats one split pass, see parked.py)
-    ntok = F.size(F.split(F.trim(txt), r"\s+"))
-    tiny = ntok <= F.lit(int(max_tokens))
-
-    base = (
-        df.withColumn("err_phrase", err)
-        .withColumn("tiny_body", tiny)
-        .withColumn("_host", url_host(F.col(url_col)))
-        # the signature only ever matches a template group, and
-        # template groups are built from tiny rows (identical text ⇒
-        # identical token count ⇒ identical tiny flag), so non-tiny
-        # rows can skip the md5 entirely — a null key never matches
-        # the left join, which is exactly template_err = false
-        .withColumn("_sig", F.when(tiny, F.md5(txt)))
-    )
-    templates = (
-        base.filter(F.col("tiny_body"))
-        .groupBy("_host", "_sig")
-        .agg(F.countDistinct(url_col).alias("_n_urls"))
-        .filter(F.col("_n_urls") >= F.lit(int(min_template_urls)))
-        .select("_host", "_sig", F.lit(True).alias("template_err"))
-    )
-    out = (
-        base.join(templates, ["_host", "_sig"], "left")
-        .withColumn(
-            "template_err", F.coalesce(F.col("template_err"), F.lit(False))
-        )
-        .drop("_host", "_sig")
-    )
-    return out.withColumn(
-        "soft404",
-        (F.col("err_phrase") & F.col("tiny_body")) | F.col("template_err"),
-    )
-
-
 def soft404_signal_flags(
     df: DataFrame,
     url_col: str = "url",
@@ -130,17 +60,30 @@ def soft404_signal_flags(
     head_chars: int = 400,
     min_template_urls: int = 5,
 ) -> DataFrame:
-    """soft404_flags projected to (url, err_phrase, tiny_body,
-    template_err, soft404) — the shape every signal consumer (the
-    report query, the host roll-up, the demotion table) actually
-    needs. Computing it directly lets the per-page regex/md5 chain run
-    ONCE into a narrow ~100-byte/row barrier that both the probe and
-    template branches read, instead of each branch re-scanning the
-    page text (r06: the payload-preserving soft404_flags keeps its
-    contract for soft404_filter, which must return whole pages)."""
+    """Soft-404 signals of a fetched-pages frame, one row per page:
+    (url, err_phrase, tiny_body, template_err, soft404).
+
+      err_phrase    — error phrase in the first `head_chars` chars
+      tiny_body     — whitespace-token count <= max_tokens
+      template_err  — the page's (host, md5(text)) group spans
+                      >= min_template_urls distinct urls AND is tiny
+      soft404       — (err_phrase AND tiny_body) OR template_err
+
+    The per-page regex/md5 chain runs ONCE into a narrow
+    ~100-byte/row barrier that both the probe and template branches
+    read, instead of each branch re-scanning the page text. The
+    template pass shuffles only (host, 16-byte md5, url) triples; page
+    text never enters an exchange."""
+    # null text reads as empty: otherwise every flag is null and the
+    # host roll-up's sum(soft404) skips the page against a count(*)
+    # that includes it
     txt = F.coalesce(F.col(text_col), F.lit(""))
     head = F.substring(txt, 1, head_chars)
+    # rlike short-circuits on the first hit (the phrase alternation
+    # cannot match empty)
     err = head.rlike(_ERR_RX)
+    # token count via split-size (regexp_count was A/B'd slower here —
+    # per-match regex overhead beats one split pass, see parked.py)
     ntok = F.size(F.split(F.trim(txt), r"\s+"))
     tiny = ntok <= F.lit(int(max_tokens))
     signals = df.select(
@@ -184,7 +127,7 @@ def soft404_host_stats(
 ) -> DataFrame:
     """Per-host soft-404 rate: (host, n_pages, n_soft404, soft404_frac).
 
-    The host-level roll-up of soft404_flags — the WWW'04 observation is
+    The host-level roll-up of soft404_signal_flags — the WWW'04 observation is
     per-HOST behavior (a server that soft-404s one dead URL soft-404s
     them all), so the scheduler acts on the host rate, not the page.
     One extra host-keyed exchange over the flags output; O(hosts) rows
@@ -220,17 +163,3 @@ def soft404_demotion(
         .withColumn("politeness_budget", F.lit(float(demoted_budget)))
     )
 
-
-def soft404_filter(
-    df: DataFrame,
-    url_col: str = "url",
-    text_col: str = "text",
-    **kw,
-) -> DataFrame:
-    """Hard gate: pages flagged soft404 never reach extraction or the
-    training corpus; signal columns drop on the way out."""
-    return (
-        soft404_flags(df, url_col=url_col, text_col=text_col, **kw)
-        .filter(~F.col("soft404"))
-        .drop("err_phrase", "tiny_body", "template_err", "soft404")
-    )

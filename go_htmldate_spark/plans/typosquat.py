@@ -140,18 +140,6 @@ def typosquat_pairs(
     )
 
 
-def typosquat_hosts(pairs: DataFrame) -> DataFrame:
-    """Roll pair rows up to the demotion currency's key: one row per
-    flagged registrable domain with its closest brand distance and the
-    number of distinct brands it shadows (a core inside several
-    brands' neighborhoods is a stronger squat signal)."""
-    return pairs.groupBy("host_reg").agg(
-        F.min("core_dist").alias("min_dist"),
-        F.countDistinct("brand_reg").alias("n_brands"),
-        F.count(F.lit(1)).alias("n_hosts"),
-    )
-
-
 def typosquat_demotion(
     pairs: DataFrame, demoted_budget: float = 0.0
 ) -> DataFrame:

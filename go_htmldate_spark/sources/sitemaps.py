@@ -42,15 +42,11 @@ _LASTMOD = r"(?s)<lastmod\s*>\s*(\d{4}-\d{2}-\d{2})"
 _PRIORITY = r"(?s)<priority\s*>\s*([0-9]+(?:\.[0-9]+)?)"
 _CHANGEFREQ = r"(?s)<changefreq\s*>\s*([A-Za-z]+)"
 
-# sitemap-protocol changefreq → expected revisit interval (seconds):
-# the site's own freshness hint, usable as a Cho–Garcia-Molina rate
-# prior (rate = 1/interval) for URLs with no fetch history yet.
-# 'always' maps to half an hour (the protocol means "changes every
-# visit" — any finite prior beats none); 'never' yields no prior.
-CHANGEFREQ_SECONDS = {
-    "always": 1800, "hourly": 3600, "daily": 86400, "weekly": 604800,
-    "monthly": 2592000, "yearly": 31536000,
-}
+# the sitemap protocol's changefreq vocabulary; any other value parses
+# to NULL
+CHANGEFREQ_VALUES = (
+    "always", "hourly", "daily", "weekly", "monthly", "yearly", "never",
+)
 
 
 def _xml_unescape(col):
@@ -105,7 +101,7 @@ def parse_sitemaps(
                         F.lit(1.0)),
             ).alias("priority"),
             F.when(
-                freq.isin(*CHANGEFREQ_SECONDS, "never"), freq
+                freq.isin(*CHANGEFREQ_VALUES), freq
             ).alias("changefreq"),
         )
         .filter(F.col("loc") != "")
@@ -136,34 +132,6 @@ def sitemap_seeds(df: DataFrame, xml_col: str = "xml",
                 6,
             ).alias("priority"),
             "lastmod",
-        )
-    )
-
-
-def sitemap_rate_priors(df: DataFrame, xml_col: str = "xml",
-                        src_col: str = "sitemap_url") -> DataFrame:
-    """Parsed `<changefreq>` hints as Cho–Garcia-Molina rate priors:
-    (url, rate) with rate = 1/CHANGEFREQ_SECONDS — the seed-time
-    stand-in for plans/recrawl's estimated per-URL Poisson change
-    rates on URLs that have no fetch history yet ('never' and absent
-    hints yield no row: no evidence, no prior). Union/coalesce with
-    estimated rates; estimates win once two fetches exist."""
-    freq_s = F.element_at(
-        F.create_map(*[
-            F.lit(x) for kv in CHANGEFREQ_SECONDS.items() for x in kv
-        ]),
-        F.col("changefreq"),
-    )
-    return (
-        parse_sitemaps(df, xml_col=xml_col, src_col=src_col)
-        .filter(
-            (F.col("kind") == "url")
-            & F.col("changefreq").isNotNull()
-            & (F.col("changefreq") != "never")
-        )
-        .select(
-            F.col("loc").alias("url"),
-            F.round(F.lit(1.0) / freq_s.cast("double"), 12).alias("rate"),
         )
     )
 

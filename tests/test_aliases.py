@@ -7,16 +7,19 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from go_htmldate_spark.plans.aliases import (
-    amphtml_edges,
-    meta_refresh_edges,
-    og_url_edges,
-    page_alias_edges,
-)
+from go_htmldate_spark.plans.aliases import meta_refresh_edges, page_alias_edges
 
 
 def _pages(spark, rows):
     return spark.createDataFrame(rows, "url string, html string")
+
+
+def _edges(pages, kind):
+    """(src_url, dst_url) pairs of one channel of page_alias_edges."""
+    return {
+        (r["src_url"], r["dst_url"])
+        for r in page_alias_edges(pages).filter(F.col("kind") == kind).collect()
+    }
 
 
 def test_meta_refresh_variants(spark):
@@ -96,12 +99,11 @@ def test_amphtml_and_og_edges(spark):
         ("https://d.example/other",
          "<meta name='og:url' content='/canonical-other'>"),
     ])
-    amp = {(r["src_url"], r["dst_url"])
-           for r in amphtml_edges(pages).collect()}
-    assert amp == {("https://d.example/art", "https://d.example/art/amp")}
-    og = {(r["src_url"], r["dst_url"]) for r in og_url_edges(pages).collect()}
+    assert _edges(pages, "amp") == {
+        ("https://d.example/art", "https://d.example/art/amp")
+    }
     # the self-declaring page contributes NO og edge
-    assert og == {
+    assert _edges(pages, "og") == {
         ("https://d.example/art?utm_source=x", "https://d.example/art"),
         ("https://d.example/other", "https://d.example/canonical-other"),
     }
@@ -132,15 +134,13 @@ def test_alias_miners_plan_is_map_only(spark):
         ("https://a.example/p",
          '<meta http-equiv="refresh" content="0;url=/n">'),
     ])
-    for fn in (meta_refresh_edges, og_url_edges):
+    for fn in (meta_refresh_edges, page_alias_edges):
         plan = fn(pages)._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan, plan
         assert "BatchEvalPython" not in plan and "ArrowEval" not in plan
 
 
 def test_mobile_alternate_edges(spark):
-    from go_htmldate_spark.plans.aliases import mobile_alternate_edges
-
     pages = _pages(spark, [
         # the m-dot declaration
         ("https://www.example.com/art",
@@ -154,9 +154,7 @@ def test_mobile_alternate_edges(spark):
         ("https://www.example.com/rss",
          '<link rel="alternate" type="application/rss+xml" href="/feed">'),
     ])
-    got = {(r["src_url"], r["dst_url"])
-           for r in mobile_alternate_edges(pages).collect()}
-    assert got == {
+    assert _edges(pages, "mobile") == {
         ("https://www.example.com/art", "https://m.example.com/art"),
     }
 

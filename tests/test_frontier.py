@@ -5,6 +5,8 @@ from any snapshot."""
 
 from __future__ import annotations
 
+from datetime import date
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -185,6 +187,31 @@ def test_bloom_no_false_negatives(spark):
     assert fp / 5000 < 0.05  # sane false-positive rate
 
 
+def test_merge_blooms_equals_single_build(spark):
+    from go_htmldate_spark.plans.bloom import merge_blooms
+
+    m, p = 1 << 14, 4
+    a = spark.range(0, 2000).select(F.xxhash64("id").alias("url_hash"))
+    b = spark.range(2000, 3000).select(F.xxhash64("id").alias("url_hash"))
+    merged = merge_blooms(build_blooms(a, p, m), build_blooms(b, p, m))
+    whole = build_blooms(a.unionByName(b), p, m)
+    # OR of the per-partition bit arrays is the bloom of the union
+    got = {r.partition_id: (bytes(r.bloom), r.n_items) for r in merged.collect()}
+    want = {r.partition_id: (bytes(r.bloom), r.n_items) for r in whole.collect()}
+    assert got == want
+    assert sum(n for _, n in got.values()) == 3000
+    # a partition present on one side only survives the outer merge
+    only_a = build_blooms(
+        a.filter(F.pmod("url_hash", F.lit(p)) == 0), p, m
+    )
+    only_b = build_blooms(
+        b.filter(F.pmod("url_hash", F.lit(p)) == 1), p, m
+    )
+    assert sorted(
+        r.partition_id for r in merge_blooms(only_a, only_b).collect()
+    ) == [0, 1]
+
+
 def test_canonicalize_parity(spark):
     urls = [
         "HTTPS://Site1.Example.org:443/a//b/c?z=1&a=2#frag",
@@ -329,6 +356,121 @@ def test_fetch_join_never_shuffles_corpus(spark, corpus):
     assert "Exchange hashpartitioning" not in plan
 
 
+def test_fetch_join_rejects_unknown_mode(spark, corpus):
+    """A mistyped CrawlConfig.fetch_join raises, naming the accepted
+    modes, instead of silently planning some other join."""
+    from go_htmldate_spark.plans.scheduler import fetch_join
+
+    cp = corpus.withColumn("url_canon", canonicalize_url(F.col("url")))
+    keys = corpus.select(canonicalize_url(F.col("url")).alias("url"))
+    with pytest.raises(ValueError, match="'broadcast' or 'bucketed'"):
+        fetch_join(cp, keys, "bucketd")
+
+
+def test_min_budgets_cautious_source_wins(spark):
+    from go_htmldate_spark.plans.scheduler import min_budgets
+
+    schema = "host string, politeness_budget double"
+    a = spark.createDataFrame(
+        [("a.example", 5.0), ("b.example", 1.0)], schema
+    )
+    b = spark.createDataFrame(
+        [("a.example", 0.0), ("c.example", 2.0)], schema
+    )
+    got = {r.host: r.politeness_budget for r in min_budgets(a, b).collect()}
+    # a demotion (0.0) overrides a larger budget; one-sided hosts survive
+    assert got == {"a.example": 0.0, "b.example": 1.0, "c.example": 2.0}
+    # no first source yet: the second passes through as-is
+    assert {r.host: r.politeness_budget
+            for r in min_budgets(None, b).collect()} == {
+        "a.example": 0.0, "c.example": 2.0,
+    }
+
+
+def test_robots_allowed_longest_prefix_wins(spark):
+    from go_htmldate_spark.plans.scheduler import robots_allowed
+
+    rules = [
+        {"path_prefix": "/private", "allow": False},
+        {"path_prefix": "/private/ok", "allow": True},
+        {"path_prefix": "/tie", "allow": False},
+        {"path_prefix": "/tie", "allow": True},
+    ]
+    paths = ["/", "/private", "/private/x", "/private/ok/y", "/tie/z"]
+    df = spark.createDataFrame(
+        [(p, rules) for p in paths] + [("/private", [])],
+        "path string, rules array<struct<path_prefix:string, allow:boolean>>",
+    )
+    got = [
+        (r.path, len(r.rules), r.ok)
+        for r in df.select(
+            "path", "rules",
+            robots_allowed(F.col("path"), F.col("rules")).alias("ok"),
+        ).collect()
+    ]
+    assert got == [
+        ("/", 4, True),  # no rule matches: allowed
+        ("/private", 4, False),
+        ("/private/x", 4, False),
+        ("/private/ok/y", 4, True),  # the longer allow prefix wins
+        ("/tie/z", 4, True),  # equal length: allow wins the tie
+        ("/private", 0, True),  # no rules at all
+    ]
+
+
+def test_recency_score_matches_oracle_law(spark):
+    from go_htmldate_spark.plans.scheduler import REF_DATE, recency_score
+
+    dates = ["2024-06-01", "2023-06-02", "2020-01-15", "2030-01-01", "", None]
+    df = spark.createDataFrame([(d,) for d in dates], "d string")
+    got = [r.s for r in df.select(recency_score(F.col("d")).alias("s")).collect()]
+    ref = date.fromisoformat(REF_DATE)
+
+    def want(d):
+        if not d:
+            return CrawlConfig.no_date_recency
+        age = max(0, (ref - date.fromisoformat(d)).days)
+        return 1.0 / (1.0 + age / 365.0)
+
+    assert got == [want(d) for d in dates]
+    assert got[0] == 1.0 and got[3] == 1.0  # future dates do not exceed 1
+
+
+def test_resolve_href_law(spark):
+    from go_htmldate_spark.plans.canonical import (
+        resolve_href,
+        url_authority_of,
+        url_scheme_of,
+    )
+
+    page = "https://a.example:8443/dir/page?q=1"
+    hrefs = ["https://b.example/x", "HTTP://c.example/", "//cdn.example/y",
+             "/root", "rel/path", "mailto:x@a.example", "", None]
+    df = spark.createDataFrame([(page, h) for h in hrefs],
+                               "url string, href string")
+    got = [
+        r.dst for r in df.select(
+            resolve_href(
+                F.col("href"),
+                url_scheme_of(F.col("url")),
+                url_authority_of(F.col("url")),
+            ).alias("dst")
+        ).collect()
+    ]
+    assert got == [
+        "https://b.example/x",
+        "HTTP://c.example/",
+        "https://cdn.example/y",
+        "https://a.example:8443/root",  # the authority keeps its port
+        None, None, None, None,
+    ]
+    bare = spark.createDataFrame([("not a url",)], "url string").select(
+        url_scheme_of(F.col("url")).alias("s"),
+        url_authority_of(F.col("url")).alias("a"),
+    ).first()
+    assert (bare.s, bare.a) == ("", "")
+
+
 def test_scheduler_parity_without_bloom_prefilter(
     spark, corpus, corpus_dates, tmp_path_factory
 ):
@@ -427,87 +569,6 @@ def test_bucketed_corpus_fetch(spark, corpus, corpus_dates, tmp_path_factory):
     orc = _run_oracle(corpus_dates, seeds, n_rounds=2)
     log = _spark_fetch_log(spark, d, 2)
     assert log == orc.fetch_log[: len(log)]
-
-
-def test_cuckoo_soundness_merge_delete(spark):
-    from go_htmldate_spark.plans.cuckoo import (
-        build_cuckoo, delete_cuckoo, merge_cuckoo, probe_cuckoo,
-    )
-
-    NB = 1 << 12
-    df = spark.range(0, 5000).select(F.xxhash64("id").alias("url_hash"))
-    state = build_cuckoo(df, 4, n_buckets=NB)
-    # no false negatives
-    assert probe_cuckoo(df, state, 4, n_buckets=NB).filter(
-        ~F.col("maybe_seen")
-    ).count() == 0
-    # sane false-positive rate
-    other = spark.range(10_000, 15_000).select(F.xxhash64("id").alias("url_hash"))
-    fp = probe_cuckoo(other, state, 4, n_buckets=NB).filter("maybe_seen").count()
-    assert fp / 5000 < 0.05
-
-    # merge: both sides' members still present
-    extra = spark.range(20_000, 22_000).select(F.xxhash64("id").alias("url_hash"))
-    merged = merge_cuckoo(state, build_cuckoo(extra, 4, n_buckets=NB), n_buckets=NB)
-    assert probe_cuckoo(df, merged, 4, n_buckets=NB).filter(
-        ~F.col("maybe_seen")
-    ).count() == 0
-    assert probe_cuckoo(extra, merged, 4, n_buckets=NB).filter(
-        ~F.col("maybe_seen")
-    ).count() == 0
-
-    # delete the extras: originals keep zero false negatives, and the
-    # deleted keys mostly drop out (residual hits are other keys' fps)
-    pruned = delete_cuckoo(merged, extra, 4, n_buckets=NB)
-    assert probe_cuckoo(df, pruned, 4, n_buckets=NB).filter(
-        ~F.col("maybe_seen")
-    ).count() == 0
-    still = probe_cuckoo(extra, pruned, 4, n_buckets=NB).filter("maybe_seen").count()
-    assert still / 2000 < 0.05
-
-
-def test_scheduler_parity_with_cuckoo_filter(
-    spark, corpus, corpus_dates, tmp_path_factory
-):
-    """Swapping the bloom for the cuckoo pre-filter must not change the
-    crawl at all (the filter is advisory; the anti-join owns truth)."""
-    seeds = _seeds(corpus)
-    d = tmp_path_factory.mktemp("cuckoo_crawl")
-    _run_spark(spark, corpus, seeds, d, n_rounds=3,
-               seen_filter="cuckoo", cuckoo_buckets=1 << 12)
-    orc = _run_oracle(corpus_dates, seeds, n_rounds=3)
-    log = _spark_fetch_log(spark, d, 3)
-    assert log == orc.fetch_log[: len(log)]
-
-
-def test_cuckoo_rejects_non_pow2_buckets(spark):
-    # round-2 ADVICE: i XOR H(fp) is only an involution for power-of-two
-    # bucket counts; any other size silently breaks the no-false-negative
-    # contract after eviction/merge.  Must raise at every entry point.
-    import pytest as _pytest
-
-    from go_htmldate_spark.plans.cuckoo import (
-        _alt, build_cuckoo, delete_cuckoo, merge_cuckoo, probe_cuckoo,
-    )
-
-    df = spark.range(0, 10).select(F.xxhash64("id").alias("url_hash"))
-    for fn in (
-        lambda: build_cuckoo(df, 4, n_buckets=30000),
-        lambda: merge_cuckoo(df, df, n_buckets=30000),
-        lambda: delete_cuckoo(df, df, 4, n_buckets=30000),
-        lambda: probe_cuckoo(df, df, 4, n_buckets=30000),
-    ):
-        with _pytest.raises(ValueError, match="power of two"):
-            fn()
-
-    # involution property on the valid path
-    import numpy as np
-
-    nb = 1 << 12
-    i = np.arange(nb, dtype=np.int64)
-    for fp in (1, 77, 255):
-        fps = np.full(nb, fp, dtype=np.uint8)
-        assert (_alt(_alt(i, fps, nb), fps, nb) == i).all()
 
 
 def test_parse_robots_star_fallback_for_named_agent(spark):
@@ -722,42 +783,15 @@ def test_resume_reads_bucket_partitioned_seen_segment(
     assert {r.url_hash for r in sched.seen.collect()} == oracle_seen
 
 
-def test_cuckoo_cogrouped_probe_matches_broadcast(spark):
-    """Cuckoo analog of the bloom cogrouped-vs-broadcast parity: the
-    executor-side cogroup path returns identical flags to the
-    driver-broadcast path, and inserted keys never flag new."""
-    from go_htmldate_spark.plans.cuckoo import (
-        build_cuckoo, probe_cuckoo, probe_cuckoo_cogrouped,
-    )
-
-    NB = 1 << 12
-    df = spark.range(0, 3000).select(F.xxhash64("id").alias("url_hash"))
-    state = build_cuckoo(df, 4, n_buckets=NB)
-    mixed = spark.range(0, 6000).select(F.xxhash64("id").alias("url_hash"))
-    a = {
-        (r.url_hash, r.maybe_seen)
-        for r in probe_cuckoo(mixed, state, 4, n_buckets=NB).collect()
-    }
-    b = {
-        (r.url_hash, r.maybe_seen)
-        for r in probe_cuckoo_cogrouped(mixed, state, 4, n_buckets=NB).collect()
-    }
-    assert a == b
-    inserted = {r.url_hash for r in df.collect()}
-    assert all(seen for h, seen in a if h in inserted)
-
-
-def test_scheduler_parity_with_cogrouped_cuckoo(
+def test_scheduler_parity_with_cogrouped_bloom(
     spark, corpus, corpus_dates, tmp_path_factory
 ):
-    """Crawl parity with the cuckoo filter forced onto the cogrouped
+    """Crawl parity with the bloom probe forced onto the cogrouped
     path (broadcast budget 0) — the full-scale shape end to end."""
     seeds = _seeds(corpus)
-    d = tmp_path_factory.mktemp("cuckoo_cogroup")
+    d = tmp_path_factory.mktemp("bloom_cogroup")
     _run_spark(
-        spark, corpus, seeds, d, n_rounds=2,
-        seen_filter="cuckoo", cuckoo_buckets=1 << 12,
-        bloom_broadcast_max_bytes=0,
+        spark, corpus, seeds, d, n_rounds=2, bloom_broadcast_max_bytes=0,
     )
     orc = _run_oracle(corpus_dates, seeds, n_rounds=2)
     log = _spark_fetch_log(spark, d, 2)
@@ -974,13 +1008,10 @@ def test_host_trustrank_matches_reference_and_demotes_spam(spark):
         )
 
 
-def test_focused_relevance_and_budget_bridge(spark):
+def test_focused_host_relevance(spark):
     """Anchor keyword share per target host, word-boundary matched on
-    the lowercased collapsed anchor; relevance maps linearly onto the
-    scheduler budget range (off-topic floor, on-topic ceiling)."""
-    from go_htmldate_spark.plans.hostgraph import (
-        focused_host_relevance, relevance_to_budget,
-    )
+    the lowercased collapsed anchor."""
+    from go_htmldate_spark.plans.hostgraph import focused_host_relevance
 
     pages = spark.createDataFrame(
         [
@@ -1008,13 +1039,6 @@ def test_focused_relevance_and_budget_bridge(spark):
         "t1.example": (1, 0, 0.0),
         "t2.example": (1, 1, 1.0),
     }
-    bud = {
-        r["host"]: r["politeness_budget"]
-        for r in relevance_to_budget(
-            focused_host_relevance(pages, ["news"]), lo=1.0, hi=9.0
-        ).collect()
-    }
-    assert bud == {"t0.example": 5.0, "t1.example": 1.0, "t2.example": 9.0}
     import pytest as _pytest
     with _pytest.raises(ValueError):
         focused_host_relevance(pages, [])
@@ -1143,12 +1167,6 @@ def test_parse_sitemaps_urlset_index_and_seeds(spark):
     assert (seeds["https://a.example/p?x=1&y=2"]
             > seeds["https://a.example/q"]
             > seeds["https://a.example/nolastmod"])
-
-    # changefreq → Cho–Garcia-Molina rate priors: only valid, non-never
-    # hints on url-kind entries yield a row
-    from go_htmldate_spark.sources.sitemaps import sitemap_rate_priors
-    priors = {r["url"]: r["rate"] for r in sitemap_rate_priors(df).collect()}
-    assert priors == {"https://a.example/p?x=1&y=2": round(1.0 / 86400, 12)}
 
 
 def test_resolve_redirects_chains_cycles_and_apply(spark):
@@ -2284,9 +2302,8 @@ def test_soft404_flags_semantics(spark):
     spanning >= min_template_urls distinct urls flag phrase-free
     parked templates, and the dangerous negatives — tiny unique stubs,
     long articles ABOUT 404s, the same template spread across
-    DIFFERENT hosts — stay unflagged. soft404_filter drops exactly the
-    flagged rows and the signal columns."""
-    from go_htmldate_spark.plans.soft404 import soft404_filter, soft404_flags
+    DIFFERENT hosts — stay unflagged."""
+    from go_htmldate_spark.plans.soft404 import soft404_signal_flags
 
     err = "Error 404 - page not found. Sorry!"
     parked = "welcome to our website under construction"
@@ -2304,12 +2321,14 @@ def test_soft404_flags_semantics(spark):
         + [(f"https://h4.example/s/{i}", f"stub {i}") for i in range(3)]
         # long article about 404s -> clean
         + [("https://h5.example/article", long404)]
-        # null text -> judged as empty (not flagged, still counted),
-        # never silently dropped by soft404_filter's ~soft404
+        # null text -> judged as empty (not flagged, still counted)
         + [("https://h5.example/null", None)]
     )
     df = spark.createDataFrame(rows, "url string, text string")
-    out = {r["url"]: r for r in soft404_flags(df, min_template_urls=5).collect()}
+    out = {
+        r["url"]: r
+        for r in soft404_signal_flags(df, min_template_urls=5).collect()
+    }
     assert len(out) == len(rows)
     r = out["https://h5.example/null"]
     assert not r["err_phrase"] and r["tiny_body"] and not r["soft404"]
@@ -2326,13 +2345,7 @@ def test_soft404_flags_semantics(spark):
     assert r["tiny_body"] and not r["err_phrase"] and not r["soft404"]
     r = out["https://h5.example/article"]
     assert r["err_phrase"] and not r["tiny_body"] and not r["soft404"]
-
-    kept = soft404_filter(df, min_template_urls=5)
-    assert kept.columns == ["url", "text"]
-    kept_urls = {r["url"] for r in kept.collect()}
-    flagged = {u for u, r in out.items() if r["soft404"]}
-    assert kept_urls == set(out) - flagged
-    assert len(flagged) == 7
+    assert sum(r["soft404"] for r in out.values()) == 7
 
 
 def test_soft404_host_demotion(spark):

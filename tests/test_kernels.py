@@ -777,3 +777,103 @@ def test_from_html_unchanged_with_finditer_finders(synth_docs, monkeypatch):
     for name, _, oracle in _RUN_FINDERS:
         monkeypatch.setattr(F, name, oracle)
     assert run_all() == fast
+
+
+# --- small Go-semantics helpers (utils.go, validators.go, extractors.go) ---
+def test_textkit_helpers_match_go_semantics():
+    from go_htmldate_spark.functions.textkit import (
+        atoi,
+        digit_count,
+        normalize_spaces,
+        str_limit,
+    )
+
+    assert normalize_spaces(" a \n\t b  ") == "a b"
+    assert str_limit("héllo", 2) == "hé"  # code points, not bytes
+    assert str_limit("abc", 10) == "abc"
+    # unicode.IsDigit counts every Nd digit, not only ASCII 0-9
+    assert digit_count("٢٠٢٠ab12") == 6
+    assert digit_count("2024-06-01") == 8
+    # strconv.Atoi: sign and surrounding space allowed, errors read as 0
+    assert atoi(" +42 ") == 42
+    assert atoi("-3") == -3
+    assert atoi(b"7") == 7
+    assert atoi("x") == 0
+
+
+def test_validate_date_parts_gregorian_calendar():
+    from datetime import date
+
+    from go_htmldate_spark.functions.validate import (
+        is_leap_year,
+        validate_date_parts,
+    )
+
+    assert [is_leap_year(y) for y in (1900, 2000, 2023, 2024)] == [
+        False, True, False, True,
+    ]
+    assert validate_date_parts(2000, 2, 29, OPTS) == date(2000, 2, 29)
+    assert validate_date_parts(2024, 2, 29, OPTS) == date(2024, 2, 29)
+    assert validate_date_parts(2023, 2, 29, OPTS) is None
+    assert validate_date_parts(2021, 4, 31, OPTS) is None  # 30-day month
+    assert validate_date_parts(2021, 13, 1, OPTS) is None
+    assert validate_date_parts(2021, 1, 0, OPTS) is None
+    assert validate_date_parts(1500, 1, 1, OPTS) is None  # pre-Gregorian
+    # outside the default [min_date, max_date] window
+    assert validate_date_parts(1994, 12, 31, OPTS) is None
+    assert validate_date_parts(OPTS.max_date.year + 1, 1, 1, OPTS) is None
+
+
+def test_compare_values_running_min_and_max():
+    from datetime import date
+
+    from go_htmldate_spark.functions.validate import (
+        check_extracted_reference,
+        compare_values,
+        to_unix,
+    )
+
+    y19, y20, y21 = (to_unix(date(y, 1, 1)) for y in (2019, 2020, 2021))
+    # original date: a running minimum, 0 meaning "nothing yet"
+    assert compare_values(0, date(2020, 1, 1), OPTS_ORIG) == (y20, True)
+    assert compare_values(y19, date(2020, 1, 1), OPTS_ORIG) == (y19, False)
+    assert compare_values(y21, date(2020, 1, 1), OPTS_ORIG) == (y20, True)
+    # updated date: a running maximum
+    assert compare_values(y19, date(2020, 1, 1), OPTS) == (y20, True)
+    assert compare_values(y21, date(2020, 1, 1), OPTS) == (y21, False)
+    # and back from unix seconds, range-checked
+    assert check_extracted_reference(y20, OPTS) == date(2020, 1, 1)
+    assert check_extracted_reference(0, OPTS) is None
+    assert check_extracted_reference(to_unix(date(1990, 1, 1)), OPTS) is None
+
+
+def test_two_digit_year_and_day_month_swap():
+    from go_htmldate_spark.functions.dateparse import (
+        correct_year,
+        try_swap_values,
+    )
+
+    assert [correct_year(y) for y in (95, 89, 5, 2011)] == [
+        1995, 2089, 2005, 2011,
+    ]
+    # (day, month) swaps only when the month cannot be one and the day can
+    assert try_swap_values(3, 14) == (14, 3)
+    assert try_swap_values(14, 3) == (14, 3)
+    assert try_swap_values(13, 14) == (13, 14)
+
+
+@pytest.mark.parametrize(
+    "url,expected",
+    [
+        ("https://example.com/2017/09/01/article", "2017-09-01"),
+        ("https://example.com/2017-9-1", "2017-09-01"),
+        ("https://example.com/2017_09_01.html", "2017-09-01"),
+        ("https://example.com/2017/02/30/x", ""),  # no such day
+        ("https://example.com/12017/09/01/x", ""),  # year not delimited
+        ("https://example.com/1990/09/01/x", ""),  # before min_date
+    ],
+)
+def test_extract_url_date(url, expected):
+    from go_htmldate_spark.functions.dateparse import extract_url_date
+
+    assert _fmt(extract_url_date(url, OPTS)) == expected

@@ -29,20 +29,24 @@ def test_exact_dedup_removes_injected_dups(spark, docs):
 def test_minhash_detects_identical_docs(spark, docs):
     from go_htmldate_spark.operators.dedup import (
         lsh_candidate_pairs,
-        minhash_jaccard_estimate,
         minhash_signatures,
     )
 
     d = docs.select("doc_id", "text").limit(50)
     dup = d.select((F.col("doc_id") + 10_000).alias("doc_id"), "text")
     sigs = minhash_signatures(d.unionByName(dup), n_hashes=32).cache()
+    # identical docs get identical signatures ...
+    by_id = {r["doc_id"]: r["minhash"] for r in sigs.collect()}
+    originals = [i for i in by_id if i < 10_000]
+    assert len(originals) == 50
+    assert all(by_id[i] == by_id[i + 10_000] for i in originals)
+    # ... so every identical pair surfaces as a candidate
     pairs = lsh_candidate_pairs(sigs, bands=8)
-    est = minhash_jaccard_estimate(sigs, pairs)
-    # every identical pair must surface with estimated jaccard 1.0
-    perfect = est.filter(
-        (F.col("b") - F.col("a") == 10_000) & (F.col("est_jaccard") == 1.0)
-    )
-    assert perfect.count() == 50
+    perfect = {
+        (r["a"], r["b"])
+        for r in pairs.filter(F.col("b") - F.col("a") == 10_000).collect()
+    }
+    assert len(perfect) == 50
 
 
 def test_incremental_dedup_probes_corpus_index(spark, docs):
@@ -95,18 +99,6 @@ def test_brute_force_topk_self_similarity(spark):
     assert abs(top[0]["cosine"] - 1.0) < 1e-6
     sims = [r["cosine"] for r in top]
     assert sims == sorted(sims, reverse=True)
-
-
-def test_ann_lsh_recall_vs_brute_force(spark):
-    from go_htmldate_spark.operators.similarity import ann_topk, brute_force_topk
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").cache()
-    q = list(emb.filter(F.col("vec_id") == 3).select("embedding").head()[0])
-    exact = {r["vec_id"] for r in brute_force_topk(emb, q, k=10).collect()}
-    approx = {r["vec_id"] for r in ann_topk(emb, q, k=10).collect()}
-    # multi-table LSH: query always found, majority recall expected
-    assert 3 in approx
-    assert len(exact & approx) >= 5
 
 
 def test_ivf_recall_and_assignment(spark):
@@ -293,31 +285,6 @@ def test_extract_features_real_decode(spark):
     media.unpersist()
 
 
-def test_streaming_extract(spark, tmp_path_factory):
-    from go_htmldate_spark.options import Options
-    from go_htmldate_spark.sources.pages import synth_pages
-    from go_htmldate_spark.streaming.extractor import stream_extract
-
-    base = tmp_path_factory.mktemp("stream")
-    in_dir, cp, out_dir = str(base / "in"), str(base / "cp"), str(base / "out")
-    pages = synth_pages(spark, 100, seed=42).select(
-        "url", "warc_ts", "html", "text", "lang"
-    )
-    pages.write.parquet(in_dir)
-
-    q = stream_extract(spark, in_dir, cp, out_dir, Options())
-    q.awaitTermination(120)
-
-    got = spark.read.parquet(out_dir)
-    assert got.count() == 100
-    assert got.filter(F.col("date") != "").count() > 80
-
-    # restart with no new data: checkpoint prevents reprocessing
-    q2 = stream_extract(spark, in_dir, cp, out_dir, Options())
-    q2.awaitTermination(120)
-    assert spark.read.parquet(out_dir).count() == 100
-
-
 # -- batch ANN self-join + simhash Hamming-radius probing -------------------
 
 def test_ann_selfjoin_recall_vs_bruteforce(spark):
@@ -393,23 +360,6 @@ def test_connected_components_chains(spark):
                    (20, 20), (21, 20), (22, 20), (23, 20)}
 
 
-def test_semantic_dedup_removes_planted(spark):
-    import pyspark.sql.functions as F
-
-    from go_htmldate_spark.operators.dedup import semantic_dedup
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    dup = emb.filter(F.col("vec_id") % 9 == 0).select(
-        (F.col("vec_id") + 100000).alias("vec_id"), "embedding"
-    )
-    out = semantic_dedup(emb.unionByName(dup), dim=64, min_cosine=0.9)
-    kept = {r.vec_id for r in out.select("vec_id").collect()}
-    originals = {r.vec_id for r in emb.select("vec_id").collect()}
-    assert kept == originals  # every planted copy dropped, every original kept
-
-
 def test_simhash_swar_equals_per_bit_fold(spark):
     """The SWAR lane-packed simhash must produce bit-identical signatures
     to the straightforward per-bit fold over the same xxhash64 stream."""
@@ -441,41 +391,6 @@ def test_simhash_swar_equals_per_bit_fold(spark):
     )
     ref = {r.doc_id: r.sh for r in with_hashes.select("doc_id", fold.alias("sh")).collect()}
     assert swar == ref
-
-
-def test_stream_dedup_urls_stateful(spark, tmp_path):
-    """applyInPandasWithState URL-seen dedup: first occurrence passes,
-    duplicates drop within AND across micro-batches, and the state
-    survives a query restart through the checkpoint."""
-    import pyspark.sql.functions as F
-
-    from go_htmldate_spark.streaming.frontier import stream_dedup_urls
-
-    in_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    def run_batch(urls, fname):
-        spark.createDataFrame([(u,) for u in urls], "url string").coalesce(
-            1
-        ).write.mode("append").parquet(in_dir)
-        stream = spark.readStream.schema("url string").parquet(in_dir)
-        q = (
-            stream_dedup_urls(stream, n_partitions=4)
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    run_batch(["https://a.org/x", "https://b.org/y", "https://a.org/x"], "b1")
-    run_batch(["https://b.org/y", "https://c.org/z"], "b2")
-
-    got = sorted(r.url for r in spark.read.parquet(out_dir).collect())
-    assert got == ["https://a.org/x", "https://b.org/y", "https://c.org/z"]
 
 
 def test_connected_components_long_chain_log_convergence(spark, tmp_path):
@@ -515,82 +430,27 @@ def test_connected_components_long_chain_log_convergence(spark, tmp_path):
             sc.setCheckpointDir(old_dir)
 
 
-def test_stream_dedup_urls_bloom_bounded_state(spark, tmp_path):
-    """Bounded-state streaming dedup: output matches the exact variant
-    on this corpus, and per-shard state stays at m/8 bytes + <=cap longs
-    no matter how many URLs stream through (read back from the state
-    store), unlike the exact array which grows with distinct URLs."""
-    from go_htmldate_spark.streaming.frontier import stream_dedup_urls_bloom
-
-    in_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    M_BITS = 1 << 16
-    CAP = 50
-
-    def run_batch(urls):
-        spark.createDataFrame([(u,) for u in urls], "url string").coalesce(
-            1
-        ).write.mode("append").parquet(in_dir)
-        stream = spark.readStream.schema("url string").parquet(in_dir)
-        q = (
-            stream_dedup_urls_bloom(
-                stream, n_partitions=4, m_bits=M_BITS, exact_cap=CAP
-            )
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    # 600 distinct urls (12x the exact cap) + within/cross-batch dupes
-    # (h5/p5 and h1/p8 repeat urls from early in the same batch, long
-    # after they aged out of the exact window — the bloom must catch)
-    batch1 = [f"https://h{i % 7}.org/p/{i}" for i in range(400)] + [
-        "https://h5.org/p/5", "https://h1.org/p/8",
-    ]
-    batch2 = [f"https://h{i % 7}.org/p/{i}" for i in range(200, 600)]
-    run_batch(batch1)
-    run_batch(batch2)
-
-    got = sorted(r.url for r in spark.read.parquet(out_dir).collect())
-    expected = sorted({f"https://h{i % 7}.org/p/{i}" for i in range(600)})
-    assert got == expected  # no false drops at this scale, no dupes kept
-
-    # bounded state: read the state store back and check every shard
-    state = spark.read.format("statestore").load(ckpt)
-    rows = state.select(
-        "value.groupState.bits", "value.groupState.recent"
-    ).collect()
-    assert len(rows) > 0
-    for r in rows:
-        assert len(r.bits) == M_BITS // 8  # fixed bitset, never grows
-        assert len(r.recent) <= CAP        # capped exact window
-
-
 # -- watermarked event-time windowed aggregation ----------------------------
 
-def _rate_pages(spark, rows):
-    """rows: [(url, ts)] → pages frame with the streaming PAGES_SCHEMA."""
-    import datetime as dt
+_RATE_PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
 
-    from go_htmldate_spark.streaming.extractor import PAGES_SCHEMA
+
+def _rate_pages(spark, rows):
+    """rows: [(url, ts)] → crawl-record pages frame."""
+    import datetime as dt
 
     data = [
         (url, dt.datetime(2021, 5, 10, h, m), b"", "", "en")
         for url, (h, m) in rows
     ]
-    return spark.createDataFrame(data, PAGES_SCHEMA)
+    return spark.createDataFrame(data, _RATE_PAGES_SCHEMA)
 
 
 def test_host_rates_watermark_late_data(spark, tmp_path_factory):
-    """Append-mode event-time windows over two availableNow runs sharing
-    a checkpoint: closed windows emit exactly once, sub-watermark late
+    """host_fetch_rates over an append-mode file-source stream, one file
+    per micro-batch: closed windows emit exactly once, sub-watermark late
     rows are dropped, open-window late rows are folded in."""
-    from go_htmldate_spark.streaming.extractor import stream_host_rates
+    from go_htmldate_spark.operators.extract import host_fetch_rates
 
     base = tmp_path_factory.mktemp("rates")
     in_dir, cp, out = str(base / "in"), str(base / "cp"), str(base / "out")
@@ -631,8 +491,14 @@ def test_host_rates_watermark_late_data(spark, tmp_path_factory):
         (u(6), (0, 2)), (u(7), (1, 5)), (u(8), (2, 30)),
     ]).coalesce(1).write.mode("append").parquet(in_dir)
 
-    stream_host_rates(
-        spark, in_dir, cp, out, max_files_per_trigger=1
+    stream = (
+        spark.readStream.schema(_RATE_PAGES_SCHEMA).format("parquet")
+        .option("maxFilesPerTrigger", 1).load(in_dir)
+    )
+    (
+        host_fetch_rates(stream).writeStream.format("parquet")
+        .option("path", out).option("checkpointLocation", cp)
+        .outputMode("append").trigger(availableNow=True).start()
     ).awaitTermination(180)
     assert emitted() == {0: 2, 10: 1, 60: 2, 80: 1}
     rows = spark.read.parquet(out).collect()
@@ -643,7 +509,7 @@ def test_host_rates_watermark_late_data(spark, tmp_path_factory):
 def test_host_rates_batch_equals_stream_shape(spark):
     """host_fetch_rates on a batch frame: same columns, one hash
     exchange (the window×host groupBy)."""
-    from go_htmldate_spark.streaming.extractor import host_fetch_rates
+    from go_htmldate_spark.operators.extract import host_fetch_rates
 
     pages = _rate_pages(spark, [
         ("https://a.example/2021/05/10/p1.html", (0, 0)),
@@ -654,110 +520,6 @@ def test_host_rates_batch_equals_stream_shape(spark):
     rows = out.collect()
     assert {r["host"] for r in rows} == {"a.example", "b.example"}
     assert all(r["n_fetched"] == 1 and r["n_dated"] == 1 for r in rows)
-
-
-def test_stream_crawl_loop_composes(spark, tmp_path_factory):
-    """Round-4 item 7: the streaming crawl loop — bounded-state URL
-    dedup + staged extraction + watermarked host rates — over one file
-    source of page batches. Three landed files = three micro-batches
-    (maxFilesPerTrigger=1); the fetch set must be exactly the first
-    occurrence of every canonical URL across all batches (the batch
-    scheduler's seen-set semantics: its fetch set equals the unseen set
-    when the politeness budget doesn't bind), with dates equal to the
-    batch extraction of that set."""
-    import datetime
-
-    from go_htmldate_spark.plans.canonical import canonicalize_url
-    from go_htmldate_spark.streaming.crawl_loop import run_stream_crawl
-
-    base = tmp_path_factory.mktemp("stream_crawl")
-    in_dir, work = str(base / "in"), str(base / "work")
-    t0 = datetime.datetime(2024, 1, 1, 0, 0, 0)
-
-    def page(i, minute):
-        # planted meta date -> deterministic extraction result
-        d = f"2021-03-{(i % 27) + 1:02d}"
-        html = (f'<html><head><meta property="article:published_time" '
-                f'content="{d}"/></head><body><a href="/next/{i}">n</a>'
-                f"</body></html>")
-        return (
-            f"https://h{i % 5}.example.org/p/{i}",
-            t0 + datetime.timedelta(minutes=minute),
-            html.encode(), "x", "en",
-        )
-
-    # batch 1: pages 0-39; batch 2: 20-59 (20 dups); batch 3: 0-79 (60 dups)
-    batches = [
-        [page(i, 0) for i in range(40)],
-        [page(i, 30) for i in range(20, 60)],
-        [page(i, 60) for i in range(80)],
-    ]
-    import os
-
-    os.makedirs(in_dir, exist_ok=True)
-    cols = ["url", "warc_ts", "html", "text", "lang"]
-    for bi, rows in enumerate(batches):
-        spark.createDataFrame(
-            rows, "url string, warc_ts timestamp, html binary, text string, lang string"
-        ).coalesce(1).write.parquet(f"{in_dir}/b{bi}", mode="overwrite")
-        # file source watches one flat dir: move the part file up
-        import glob
-        import shutil
-
-        part = glob.glob(f"{in_dir}/b{bi}/part-*.parquet")[0]
-        shutil.move(part, f"{in_dir}/batch_{bi}.parquet")
-        shutil.rmtree(f"{in_dir}/b{bi}")
-
-    fetch_dir, rates_dir, freshness_dir, discovery_dir = run_stream_crawl(
-        spark, in_dir, work
-    )
-
-    got = spark.read.parquet(fetch_dir)
-    # exactly the 80 distinct canonical URLs, first occurrence only
-    assert got.count() == 80
-    assert got.select("url_canon").distinct().count() == 80
-    # dates equal the batch extraction of the same first-occurrence set
-    expected = {
-        (f"https://h{i % 5}.example.org/p/{i}", f"2021-03-{(i % 27) + 1:02d}")
-        for i in range(80)
-    }
-    assert {(r["url"], r["date"]) for r in got.collect()} == expected
-    # discovery channel: each page's /next/i anchor, resolved against
-    # the page origin, first occurrence only across the dup batches
-    seeds = spark.read.parquet(discovery_dir)
-    assert seeds.count() == 80
-    assert {r["url"] for r in seeds.collect()} == {
-        f"https://h{i % 5}.example.org/next/{i}" for i in range(80)
-    }
-    # freshness half: revisited pages carry running CGM estimates —
-    # page 20 was fetched in all three batches with identical html, so
-    # its FINAL estimate is 2 intervals, 0 changes, rate 0; a
-    # single-fetch page (70) has no interval and emits nothing
-    fresh = spark.read.parquet(freshness_dir).collect()
-    latest = {}
-    for r in fresh:
-        if (r["url"] not in latest
-                or r["n_intervals"] > latest[r["url"]]["n_intervals"]):
-            latest[r["url"]] = r
-    p20 = latest["https://h0.example.org/p/20"]
-    assert (p20["n_intervals"], p20["n_changes"]) == (2, 0)
-    assert p20["rate_per_day"] == 0.0
-    assert "https://h0.example.org/p/70" not in latest
-
-    # three micro-batches really ran (one offsets file per batch)
-    offsets = os.listdir(f"{work}/ckpt_fetch/offsets")
-    assert len([f for f in offsets if not f.startswith(".")]) >= 3
-    # telemetry half: finalized windows landed with per-host counts
-    rates = spark.read.parquet(rates_dir)
-    finalized = {
-        (r["win_start"], r["host"]): (r["n_fetched"], r["n_dated"])
-        for r in rates.collect()
-    }
-    # the [00:00, 00:10) window (batch-1 pages 0-39, 8 per host)
-    # finalizes once the watermark passes it (batch-2 max ts 00:30
-    # - 20 min = 00:10 >= window end, so it emits during batch 3)
-    for h in range(5):
-        assert finalized[(t0, f"h{h}.example.org")] == (8, 8)
 
 
 def test_gopher_repetition_flags_repetitive_docs(spark):
@@ -793,11 +555,8 @@ def test_stratified_sample_is_map_only_and_deterministic(spark):
     assert 0 < counts.get("de", 0) < orig["de"]     # partial stratum partial
 
 
-def test_ngram_contamination_and_decontaminate(spark):
-    from go_htmldate_spark.operators.curation import (
-        decontaminate,
-        ngram_contamination,
-    )
+def test_ngram_contamination(spark):
+    from go_htmldate_spark.operators.curation import ngram_contamination
 
     clean = " ".join(f"c{i}" for i in range(40))
     leaked = " ".join(f"b{i}" for i in range(40))
@@ -812,8 +571,6 @@ def test_ngram_contamination_and_decontaminate(spark):
     assert c[0]["contamination_frac"] == 0.0
     assert c[1]["contamination_frac"] == 1.0
     assert 0.0 < c[2]["contamination_frac"] < 1.0
-    kept = {r["doc_id"] for r in decontaminate(docs, bench, max_frac=0.05, n=8).collect()}
-    assert kept == {0, 2} or kept == {0}  # leaked doc always dropped
     # hashed scale path gives identical results on this data
     ch = {r["doc_id"]: r["contamination_frac"]
           for r in ngram_contamination(docs, bench, n=8, hashed=True).collect()}
@@ -1276,163 +1033,6 @@ def test_host_boilerplate_is_host_scoped_and_fractional(spark):
     out50 = {r["doc_id"]: r for r in
              host_boilerplate(docs, min_pct=50, min_docs=2).collect()}
     assert out50[1]["clean_text"] == "prose one"
-
-
-def test_stream_change_rate_matches_batch(spark, tmp_path):
-    """Streaming CGM change-rate (streaming/recrawl): folding fetch
-    observations across three micro-batches yields, for every URL, a
-    final running estimate equal to the batch change_rate() over the
-    union of observations — including a restart between batches
-    (state survives the checkpoint). Single-fetch URLs emit nothing,
-    matching the batch drop."""
-    from go_htmldate_spark.plans.recrawl import change_rate
-    from go_htmldate_spark.streaming.recrawl import stream_change_rate
-
-    day = 86400.0
-    batches = [
-        [("u1", 0.0, "a"), ("u2", 0.0, "x"), ("solo", 0.0, "s")],
-        [("u1", 1 * day, "b"), ("u2", 2 * day, "x")],
-        [("u1", 2 * day, "b"), ("u2", 4 * day, "y"), ("u3", 0.0, "q"),
-         ("u3", 3 * day, "q2")],
-    ]
-    in_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    for rows in batches:
-        spark.createDataFrame(
-            rows, "url string, fetch_ts double, content_sig string"
-        ).coalesce(1).write.mode("append").parquet(in_dir)
-        stream = spark.readStream.schema(
-            "url string, fetch_ts double, content_sig string"
-        ).parquet(in_dir)
-        q = (
-            stream_change_rate(stream, n_partitions=4)
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    # latest emission per URL = the running estimate after batch 3
-    got = {}
-    for r in spark.read.parquet(out_dir).collect():
-        prev = got.get(r["url"])
-        if prev is None or r["n_intervals"] > prev["n_intervals"]:
-            got[r["url"]] = r
-
-    all_rows = [r for b in batches for r in b]
-    want = {
-        r["url"]: r
-        for r in change_rate(spark.createDataFrame(
-            all_rows, "url string, fetch_ts double, content_sig string"
-        )).collect()
-    }
-    assert set(got) == set(want) == {"u1", "u2", "u3"}  # solo dropped
-    for u in want:
-        g, w = got[u], want[u]
-        assert (g["n_intervals"], g["n_changes"]) == (
-            w["n_intervals"], w["n_changes"])
-        assert g["last_fetch_ts"] == w["last_fetch_ts"]
-        assert abs(g["rate_per_day"] - w["rate_per_day"]) < 1e-12
-
-
-def test_stream_change_rate_multichunk_order(spark, tmp_path):
-    """One shard's micro-batch delivered as MULTIPLE Arrow chunks must
-    fold in global (url, fetch_ts) order, not per-chunk order — the
-    estimator is order-sensitive (n_changes compares consecutive
-    sigs). Pinned by shrinking arrow.maxRecordsPerBatch below the
-    batch size and feeding timestamps that interleave across chunks."""
-    from go_htmldate_spark.plans.recrawl import change_rate
-    from go_htmldate_spark.streaming.recrawl import stream_change_rate
-
-    day = 86400.0
-    # one URL, 40 observations, written in REVERSE ts order so chunk
-    # boundaries split the sequence badly; sig flips every 3rd fetch
-    rows = [("u", float(t) * day, f"s{t // 3}") for t in range(39, -1, -1)]
-    in_dir, out_dir, ckpt = (
-        str(tmp_path / d) for d in ("in", "out", "ckpt")
-    )
-    spark.createDataFrame(
-        rows, "url string, fetch_ts double, content_sig string"
-    ).coalesce(1).write.parquet(in_dir)
-
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
-    try:
-        stream = spark.readStream.schema(
-            "url string, fetch_ts double, content_sig string"
-        ).parquet(in_dir)
-        q = (
-            stream_change_rate(stream, n_partitions=1)
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-
-    got = spark.read.parquet(out_dir).collect()
-    assert len(got) == 1
-    want = change_rate(spark.createDataFrame(
-        rows, "url string, fetch_ts double, content_sig string"
-    )).head()
-    g = got[0]
-    assert (g["n_intervals"], g["n_changes"]) == (
-        want["n_intervals"], want["n_changes"])
-    assert abs(g["rate_per_day"] - want["rate_per_day"]) < 1e-12
-
-
-def test_stream_change_rate_bounded_state_eviction(spark, tmp_path):
-    """max_urls_per_shard: past the cap the stalest URLs evict and
-    restart their statistics on the next observation, while hot URLs
-    keep accumulating across micro-batches."""
-    from go_htmldate_spark.streaming.recrawl import stream_change_rate
-
-    day = 86400.0
-    in_dir, out_dir, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
-
-    def feed(rows):
-        spark.createDataFrame(
-            rows, "url string, fetch_ts double, content_sig string"
-        ).coalesce(1).write.mode("append").parquet(in_dir)
-        stream = spark.readStream.schema(
-            "url string, fetch_ts double, content_sig string"
-        ).parquet(in_dir)
-        q = (
-            stream_change_rate(stream, n_partitions=1, max_urls_per_shard=2)
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    # batch 1: three URLs (cap 2) — 'cold' has the smallest last_ts
-    feed([("cold", 0.0, "a"), ("cold", 1 * day, "b"),
-          ("warm", 2 * day, "a"), ("warm", 3 * day, "b"),
-          ("hot", 4 * day, "a"), ("hot", 5 * day, "b")])
-    # batch 2: one new fetch each for cold and hot
-    feed([("cold", 6 * day, "c"), ("hot", 6 * day, "c")])
-
-    rows = spark.read.parquet(out_dir).collect()
-    by = {}
-    for r in rows:
-        by.setdefault(r["url"], []).append(r["n_intervals"])
-    # hot survived the cap: batch 2 continues its count (1 -> 2)
-    assert sorted(by["hot"]) == [1, 2]
-    # cold was evicted after batch 1: its batch-2 fetch restarts the
-    # statistics (single fetch since restart -> no emission)
-    assert by["cold"] == [1]
 
 
 def test_dup_span_stats_and_removal(spark):

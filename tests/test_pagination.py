@@ -12,10 +12,10 @@ import pyspark.sql.functions as F
 
 from go_htmldate_spark.plans.pagination import (
     deep_page_demotion,
+    link_rel_edges,
     link_rel_href,
     pagination_chains,
     rel_next_edges,
-    rel_prev_edges,
 )
 
 
@@ -77,7 +77,7 @@ def test_prev_edges_use_prev_keyword(spark):
          '<link rel="next" href="https://a.example/p3">'),
     ], "url string, html string")
     got = [(r["src_url"], r["dst_url"])
-           for r in rel_prev_edges(pages).collect()]
+           for r in link_rel_edges(pages, "prev").collect()]
     assert got == [("https://a.example/p2", "https://a.example/p1")]
 
 

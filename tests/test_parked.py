@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from go_htmldate_spark.plans.parked import (
-    parked_demotion,
+    parked_budget_demotion,
     parked_flags,
     parked_host_stats,
 )
@@ -81,17 +81,12 @@ def test_parked_host_stats_and_demotion(spark):
              parked_host_stats(parked_flags(pages), min_pages=3).collect()}
     assert stats["bad.example"]["parked_rate"] == 1.0
     assert stats["good.example"]["parked_rate"] == 0.0
-    budgets = spark.createDataFrame(
-        [("bad.example", 0.5), ("good.example", 5.0), ("new.example", 5.0)],
-        "host string, politeness_budget double",
-    )
-    got = {r["host"]: r["politeness_budget"] for r in parked_demotion(
-        budgets, parked_host_stats(parked_flags(pages), min_pages=3)
+    # demotion rows in the crawl job's min-merge currency: only the
+    # host past the threshold, at budget 0
+    got = {r["host"]: r["politeness_budget"] for r in parked_budget_demotion(
+        parked_host_stats(parked_flags(pages), min_pages=3)
     ).collect()}
-    # the flagged host's row is OVERWRITTEN to 0 — dropping it would
-    # coalesce back to the scheduler default and RAISE its budget
-    assert got == {"bad.example": 0.0, "good.example": 5.0,
-                   "new.example": 5.0}
+    assert got == {"bad.example": 0.0}
 
 
 def test_parked_plan_is_map_only(spark):

@@ -5,9 +5,12 @@ from __future__ import annotations
 
 import random
 
+from pyspark.sql import functions as F
+
 from go_htmldate_spark.plans.psl import (
     MINI_PSL,
-    registrable_rollup,
+    registrable_or_host,
+    registrable_py,
     with_registrable,
 )
 
@@ -84,15 +87,34 @@ def test_registrable_fuzz_matches_reference(spark):
         assert got[h] == _psl_ref(h), (h, got[h], _psl_ref(h))
 
 
-def test_registrable_rollup_groups_shards_not_tenants(spark):
+def test_registrable_groups_shards_not_tenants(spark):
     rows = [("www.site.co.uk",), ("img1.site.co.uk",), ("img2.site.co.uk",),
             ("alice.github.io",), ("bob.github.io",), ("com",)]
     df = spark.createDataFrame(rows, "host string")
     got = {r["registrable_domain"]: r["n_hosts"]
-           for r in registrable_rollup(df).collect()}
+           for r in with_registrable(df)
+           .filter(F.col("registrable_domain").isNotNull())
+           .groupBy("registrable_domain")
+           .agg(F.count("*").alias("n_hosts")).collect()}
     # one site's shards share one identity; platform tenants stay apart
     assert got == {"site.co.uk": 3, "alice.github.io": 1,
                    "bob.github.io": 1}
+
+
+def test_registrable_or_host_matches_python_reference(spark):
+    hosts = ["www.example.com", "a.b.news.co.uk", "deep.x.user.github.io",
+             "com", "co.uk", "shop.thing.ck", "thing.ck", "sub.www.ck",
+             "WWW.Example.COM", "host.unlistedtld"]
+    df = spark.createDataFrame([(h,) for h in hosts], "host string")
+    got = {r["host"]: r["key"] for r in df.select(
+        "host", registrable_or_host(F.col("host")).alias("key")
+    ).collect()}
+    # the scheduler oracle groups politeness by registrable_py; the
+    # column law must agree, bare suffixes falling back to the host
+    for h in hosts:
+        assert got[h] == registrable_py(h), (h, got[h], registrable_py(h))
+    assert got["co.uk"] == "co.uk" and got["thing.ck"] == "thing.ck"
+    assert got["WWW.Example.COM"] == "example.com"
 
 
 def test_registrable_plan_is_map_only(spark):

@@ -7,12 +7,9 @@ from pyspark.sql import functions as F
 
 from go_htmldate_spark.plans.sketches import (
     cms_build,
-    cms_heavy_hitters,
-    cms_merge,
     cms_point_estimate,
     hll_estimate,
     hll_estimate_py,
-    hll_merge,
     hll_registers,
 )
 
@@ -55,12 +52,17 @@ class TestHLL:
             rel = abs(est[f"h{h}.example"] - n) / n
             assert rel < 4 * 1.04 / math.sqrt(256), (h, n, est[f"h{h}.example"])
 
-    def test_merge_equals_single_pass(self, spark):
+    def test_registers_of_halves_max_merge_to_whole(self, spark):
+        # registers are a per-(key, register) max, so shards of one
+        # stream combine by max into exactly the single-pass table
         df = _host_urls(spark, n_hosts=3)
         a = df.filter(F.col("url").endswith("0") | F.col("url").endswith("1"))
         b = df.subtract(a)
-        merged = hll_merge(
-            hll_registers(a, "host", "url"), hll_registers(b, "host", "url")
+        merged = (
+            hll_registers(a, "host", "url")
+            .unionByName(hll_registers(b, "host", "url"))
+            .groupBy("key", "register")
+            .agg(F.max("rho").alias("rho"))
         )
         whole = hll_registers(df, "host", "url")
         m = {(r["key"], r["register"]): r["rho"] for r in merged.collect()}
@@ -116,27 +118,10 @@ class TestCMS:
             assert est[k] >= t  # CM never under-counts
             assert est[k] <= t + math.ceil(math.e * n / 1024)
 
-    def test_heavy_hitters_screen(self, spark):
-        df, truth = self._freqs(spark)
-        n = sum(truth.values())
-        sketch = cms_build(df, "host", d=4, w=1024)
-        heavy = {
-            r["key"]
-            for r in cms_heavy_hitters(
-                sketch, df.select("host").distinct(), n, 0.2, "host"
-            ).collect()
-        }
-        assert "big.example" in heavy  # no false negative, ever
-        assert not any(k.startswith("t") for k in heavy)  # tails screened
-
-    def test_merge_and_weights(self, spark):
+    def test_weight_column_equals_multiplicity(self, spark):
         df, _ = self._freqs(spark)
-        a, b = df.randomSplit([0.5, 0.5], seed=7)
-        merged = cms_merge(cms_build(a, "host"), cms_build(b, "host"))
         whole = cms_build(df, "host")
-        m = {(r["row"], r["col"]): r["cnt"] for r in merged.collect()}
         w = {(r["row"], r["col"]): r["cnt"] for r in whole.collect()}
-        assert m == w
         weighted = cms_build(
             df.groupBy("host").agg(F.count("*").alias("n")),
             "host",

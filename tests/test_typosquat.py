@@ -2,9 +2,11 @@
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
+
 from go_htmldate_spark.plans.typosquat import (
+    confusable_skeleton,
     typosquat_demotion,
-    typosquat_hosts,
     typosquat_pairs,
 )
 
@@ -51,13 +53,9 @@ def test_typosquat_pairs_distance_and_exclusions(spark):
     assert all(h != "google.com" and h != "www.google.com" for h, _, _ in got2)
 
 
-def test_typosquat_rollup_and_demotion(spark):
+def test_typosquat_demotion(spark):
     hosts, brands = _tables(spark)
     pairs = typosquat_pairs(hosts, brands, max_dist=1)
-    roll = {r["host_reg"]: r for r in typosquat_hosts(pairs).collect()}
-    assert roll["gogle.com"]["min_dist"] == 1
-    assert roll["gogle.com"]["n_hosts"] == 2  # gogle.com + img2.gogle.com
-    assert roll["google.net"]["min_dist"] == 0
     demo = {r["host"]: r["politeness_budget"]
             for r in typosquat_demotion(pairs).collect()}
     assert set(demo) == {"gogle.com", "img2.gogle.com", "google.net"}
@@ -106,3 +104,14 @@ def test_typosquat_skeleton_catches_homoglyphs(spark):
     assert ("paypa1.com", "paypal.com", 0) in folded
     assert all(h != "paypal.com" and h != "zzzzz.com"
                for h, _, _ in folded)
+
+
+def test_confusable_skeleton_folds_lookalikes(spark):
+    cores = ["g00gle", "paypa1", "rnicrosoft", "vvikipedia", "clomain",
+             "google"]
+    df = spark.createDataFrame([(c,) for c in cores], "core string")
+    got = [r.s for r in df.select(
+        confusable_skeleton(F.col("core")).alias("s")
+    ).collect()]
+    assert got == ["google", "paypal", "microsoft", "wikipedia", "domain",
+                   "google"]
