@@ -129,16 +129,16 @@ def main() -> None:
                 break
 
         # flat-wall check: mean wall of the last 3 rounds vs rounds 2-4
-        # (round 0-1 pay bloom-crossing one-time costs); short soaks
-        # (frontier exhausted early) report growth=None instead of
-        # crashing away the collected rows
-        early = [r["wall_sec"] for r in rows[2:5]]
-        late = [r["wall_sec"] for r in rows[-3:]]
-        growth = (
-            round((sum(late) / len(late)) / max(sum(early) / len(early), 0.1), 2)
-            if early and late
-            else None
-        )
+        # (round 0-1 pay bloom-crossing one-time costs). The two windows
+        # are disjoint only from 8 rounds on; shorter soaks (including
+        # a frontier exhausted early) report growth=None
+        growth = None
+        if len(rows) >= 8:
+            early = [r["wall_sec"] for r in rows[2:5]]
+            late = [r["wall_sec"] for r in rows[-3:]]
+            growth = round(
+                (sum(late) / len(late)) / max(sum(early) / len(early), 0.1), 2
+            )
         print(
             "RESULT "
             + json.dumps(

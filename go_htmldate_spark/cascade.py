@@ -4,10 +4,11 @@ Reimplements the reference's precedence-ordered pipeline
 (/root/reference/core.go:136-271 findDate, :353-475 meta scan,
 :479-554 abbr, :558-617 time elements, :620-653 text probes,
 :656-798 searchPage; /root/reference/extractors.go:210-326 JSON-LD,
-:329-399 idiosyncrasies/og:image/timestamp) over our stdlib DOM.
+:329-399 idiosyncrasies/og:image/timestamp) over the DOM that the C
+kernel builds (dom/parser.py).
 
-This module is pure Python: it is the kernel the Spark pandas UDF maps
-over Arrow batches (operators/extract.py). Everything batch-parallel or
+This module is the per-document kernel the Spark pandas UDF maps over
+Arrow batches (operators/extract.py). Everything batch-parallel or
 engine-side (URL fast path, staged gating) lives in the operators
 package — this file is deliberately single-document-scoped, like the
 reference.
@@ -576,23 +577,7 @@ def _prune_and_collect(doc: domp.Node) -> list[domp.Node]:
     subtrees are detached and never visited, survivors come back in
     document order. Identical result to running the three passes — the
     prune rules are independent per-node predicates."""
-    cdom = domp._CDOM
-    if cdom is not None and isinstance(doc, cdom.NodeBase):
-        return cdom.prune_and_collect(doc, _CLEAN_TAGS)
-    out: list[domp.Node] = []
-    push = out.append
-    stack = list(reversed(doc.children))
-    while stack:
-        node = stack.pop()
-        if node.kind != domp.ELEMENT:
-            continue
-        if node.tag in _CLEAN_TAGS or sel.discard_rule(node):
-            node.remove()
-            continue
-        push(node)
-        if node.children:
-            stack.extend(reversed(node.children))
-    return out
+    return domp._CDOM.prune_and_collect(doc, _CLEAN_TAGS)
 
 
 def find_date(doc: domp.Node, opts: Options) -> DateHit:
@@ -636,14 +621,9 @@ def find_date(doc: domp.Node, opts: Options) -> DateHit:
     pruned = doc
     post_elems = _prune_and_collect(pruned)
 
-    cdom = domp._CDOM
-    if cdom is not None:
-        date_elements = cdom.filter_date(post_elems, opts.skip_extensive_search)
-    else:
-        date_selector = (
-            sel.fast_date if opts.skip_extensive_search else sel.slow_date
-        )
-        date_elements = [e for e in post_elems if date_selector(e)]
+    date_elements = domp._CDOM.filter_date(
+        post_elems, opts.skip_extensive_search
+    )
     raw_string, date_result = examine_other_elements(date_elements, opts)
     if date_result is not None:
         return raw_string, date_result
@@ -760,12 +740,6 @@ def _finish_result(
 
 _NEED_TREE = object()
 
-# GO_HTMLDATE_NO_PRELUDE=1 forces every document through the tree
-# pipeline — the A/B lever for differential tests and benchmarks
-import os as _os
-
-_PRELUDE_ENABLED = not _os.environ.get("GO_HTMLDATE_NO_PRELUDE")
-
 
 def _prelude_extract(html: str, opts: Options):
     """Tree-free fast path: C scan_prelude + the cascade's pre-prune
@@ -777,12 +751,9 @@ def _prelude_extract(html: str, opts: Options):
     go through the full tree pipeline.  Stage functions are the SAME
     objects the tree path runs, on bit-identical inputs — parity is
     structural, and pinned by test_cdom_parity differentials."""
-    cdom = domp._CDOM
-    if cdom is None or not hasattr(cdom, "scan_prelude") or not _PRELUDE_ENABLED:
-        return _NEED_TREE
     try:
-        scan = cdom.scan_prelude(domp.Node, html)
-    except Exception:
+        scan = domp._CDOM.scan_prelude(domp.Node, html)
+    except ValueError:
         # scan raises exactly where build_into raises; the tree path
         # will take the same fallback parser for this document
         return _NEED_TREE

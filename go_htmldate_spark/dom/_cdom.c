@@ -1,10 +1,11 @@
-/* C accelerator for the DOM hot path.
+/* The C DOM kernel: the one product DOM of the extraction cascade.
  *
  * Two pieces:
  *   - NodeBase: a C type with the exact field layout of parser.Node
- *     (kind, tag, _attrs, _raw_attrs, children, parent, data).  The
- *     Python Node subclasses it with __slots__ = () and supplies all
- *     methods, so instances created here are full Nodes.
+ *     (kind, tag, _attrs, _raw_attrs, children, parent, data) and its
+ *     attr() method.  The Python Node subclasses it with
+ *     __slots__ = () and supplies the other methods, so instances
+ *     created here are full Nodes.
  *   - build_into(root, html): the tokenizer.  Semantics mirror
  *     fastparse.tokenize_into token for token (same token grammar as
  *     its _TOKEN regex, same implied-close / rawtext / void handling),
@@ -20,10 +21,10 @@
  * provably-exact case (fast_unescape), and falls back to
  * html.unescape for anything else.
  *
- * Built on demand by cnative.py with the system gcc; every caller
- * falls back to the pure-Python tokenizer when this module is
- * unavailable, so the extension is an accelerator, never a
- * requirement.
+ * Built on demand by cnative.py with the system C compiler, which is
+ * a requirement: importing the package fails when the build fails.
+ * Documents build_into refuses (ValueError: tag names of 256+ bytes,
+ * lone surrogates) are parsed by fastparse.tokenize_into instead.
  */
 #define _GNU_SOURCE /* memmem */
 #define PY_SSIZE_T_CLEAN
@@ -171,8 +172,8 @@ static PyGetSetDef node_getset[] = {
     {NULL},
 };
 
-/* attr(name) -> first attribute value, "" when absent — the C twin of
- * _NodeOps.attr (first occurrence wins, like x/net/html).  The meta
+/* attr(name) -> first attribute value, "" when absent (first
+ * occurrence wins, like x/net/html).  The meta
  * scan calls this ~7x per <meta>; keeping the lazy parse + linear scan
  * in C removes ~125k Python frames per 1000 eval docs. */
 static PyObject *
@@ -2426,7 +2427,7 @@ static PyObject *
 cdom_release_tree(PyObject *self, PyObject *arg)
 {
     if (!PyObject_TypeCheck(arg, &NodeBase_Type))
-        Py_RETURN_NONE; /* pure-Python node: caller's fallback handles */
+        Py_RETURN_NONE; /* not a Node: no parent links to clear */
     if (release_subtree((CNode *)arg) < 0)
         return NULL;
     Py_RETURN_NONE;

@@ -1,65 +1,84 @@
-"""Compile-on-demand loader for the _cdom C accelerator.
+"""Build-and-load for the _cdom C kernel, the one product DOM.
 
-The extension is built from _cdom.c with the system C compiler the
-first time the DOM is imported, cached next to the source
-(dom/_build/, gitignored), and re-built whenever _cdom.c is newer
-than the cached .so.  Everything degrades gracefully:
+_cdom.c is read through the package loader, so one code path serves a
+source checkout and a `spark-submit --py-files` zip alike. The
+extension is compiled with the system C compiler (`CC`, default gcc)
+into a per-user cache ($XDG_CACHE_HOME, else ~/.cache, under
+go_htmldate_spark/). The file name carries a hash of the source and
+the interpreter: an edited source or another Python gets its own
+build, and an unchanged one is never rebuilt.
 
-- no compiler / failed build / failed import  -> pure-Python DOM
-- GO_HTMLDATE_NO_CDOM=1                       -> pure-Python DOM
-- a parse the C tokenizer refuses (e.g. absurd tag names, lone
-  surrogates)                                  -> per-document fallback
+A C compiler and the Python headers are therefore required wherever
+the package is imported (the driver and every executor). A failed
+build raises ImportError carrying the compiler command and its stderr;
+there is no pure-Python DOM to fall back to. The only per-document
+fallback is fastparse.build_tree, for the two inputs the C tokenizer
+refuses (tag names of 256+ bytes, lone surrogates).
 
-Concurrent builders (32 Spark python workers importing at once) each
+Concurrent builders (every Spark Python worker importing at once) each
 compile to a unique temp file and os.replace() it into place, which is
-atomic on POSIX — last writer wins, every loader sees a complete file.
+atomic on POSIX: every loader sees a complete file.
 """
 
 from __future__ import annotations
 
+import hashlib
 import importlib.machinery
+import importlib.resources
 import importlib.util
 import os
+import shlex
 import subprocess
 import sys
 import sysconfig
 import tempfile
 
-_HERE = os.path.dirname(os.path.abspath(__file__))
-_SRC = os.path.join(_HERE, "_cdom.c")
-_BUILD_DIR = os.path.join(_HERE, "_build")
-
-_mod: object = None  # None = not tried, False = unavailable
+_mod: object = None  # None = not loaded yet
 
 
-def _so_path() -> str:
-    suffix = importlib.machinery.EXTENSION_SUFFIXES[0]
-    return os.path.join(_BUILD_DIR, f"_cdom{suffix}")
+def _cache_dir() -> str:
+    base = os.environ.get("XDG_CACHE_HOME") or os.path.join(
+        os.path.expanduser("~"), ".cache"
+    )
+    return os.path.join(base, "go_htmldate_spark")
 
 
-def _compile() -> str:
-    os.makedirs(_BUILD_DIR, exist_ok=True)
+def _build(src: bytes, out: str) -> None:
     include = sysconfig.get_paths()["include"]
-    out = _so_path()
-    fd, tmp = tempfile.mkstemp(suffix=".so", dir=_BUILD_DIR)
-    os.close(fd)
-    cc = os.environ.get("CC", "gcc")
-    cmd = [cc, "-O2", "-fPIC", "-shared", f"-I{include}", _SRC, "-o", tmp]
+    cmd = shlex.split(os.environ.get("CC") or "gcc") + [
+        "-O2", "-fPIC", "-shared", f"-I{include}", "-x", "c", "-",
+    ]
     try:
-        subprocess.run(
-            cmd, check=True, capture_output=True, timeout=120
-        )
+        os.makedirs(os.path.dirname(out), exist_ok=True)
+        fd, tmp = tempfile.mkstemp(suffix=".so", dir=os.path.dirname(out))
+        os.close(fd)
+    except OSError as e:
+        raise ImportError(f"cannot write the C DOM kernel build: {e}") from e
+    cmd += ["-o", tmp]
+    try:
+        proc = subprocess.run(cmd, input=src, capture_output=True, timeout=120)
+        if proc.returncode != 0:
+            raise ImportError(
+                f"building the C DOM kernel failed (exit {proc.returncode}): "
+                f"{shlex.join(cmd)}\n{proc.stderr.decode(errors='replace')}"
+            )
         os.replace(tmp, out)
+    except (OSError, subprocess.SubprocessError) as e:
+        raise ImportError(
+            f"building the C DOM kernel failed: {shlex.join(cmd)}: {e}"
+        ) from e
     finally:
         if os.path.exists(tmp):
             os.unlink(tmp)
-    return out
 
 
 def _load() -> object:
-    so = _so_path()
-    if not os.path.exists(so) or os.path.getmtime(so) < os.path.getmtime(_SRC):
-        so = _compile()
+    src = importlib.resources.files(__package__).joinpath("_cdom.c").read_bytes()
+    key = hashlib.sha256(src + sys.version.encode()).hexdigest()[:16]
+    suffix = importlib.machinery.EXTENSION_SUFFIXES[0]
+    so = os.path.join(_cache_dir(), f"_cdom-{key}{suffix}")
+    if not os.path.exists(so):
+        _build(src, so)
     # module name must match the PyInit__cdom export
     spec = importlib.util.spec_from_file_location("_cdom", so)
     mod = importlib.util.module_from_spec(spec)
@@ -67,18 +86,10 @@ def _load() -> object:
     return mod
 
 
-def get() -> object | None:
-    """The configured _cdom module, or None when unavailable."""
+def get() -> object:
+    """The _cdom module, built on first use. Raises ImportError when it
+    cannot be built or loaded."""
     global _mod
-    if _mod is False:
-        return None
     if _mod is None:
-        if os.environ.get("GO_HTMLDATE_NO_CDOM"):
-            _mod = False
-            return None
-        try:
-            _mod = _load()
-        except Exception:
-            _mod = False
-            return None
-    return _mod or None
+        _mod = _load()
+    return _mod

@@ -1,10 +1,11 @@
-"""Regex-based fast HTML tokenizer.
+"""Regex-based HTML tokenizer: the Python twin of _cdom.build_into.
 
-Builds the same Node tree as parser.py's html.parser path, ~3-5× faster
-(one compiled-regex scan, C-side matching; attribute parsing only for
-tags that have attributes; rawtext handled with str.find). Falls back
-to the stdlib builder on any internal error. Golden parity is enforced
-by the full fixture suite + the 1000-doc eval corpus.
+Builds the same Node tree as the C tokenizer (one compiled-regex scan;
+attribute parsing only for tags that have attributes; rawtext handled
+with str.find). parser.parse_html uses it for the documents the C
+tokenizer refuses (tag names of 256+ bytes, lone surrogates), and
+tests/test_cdom_parity.py uses it, with _parse_attrs, as the parity
+oracle for the C tokenizer and attribute parser.
 """
 
 from __future__ import annotations
@@ -74,8 +75,8 @@ _IMPLIED = _P_CLOSERS | frozenset(_SELF_CLOSERS)
 
 
 def tokenize_into(root: Node, html: str) -> None:
-    """Build children of `root` from html text (same tree shape as the
-    stdlib builder: implied </p>, li/td/tr self-closers, void tags,
+    """Build children of `root` from html text (same tree shape as
+    _cdom.build_into: implied </p>, li/td/tr self-closers, void tags,
     HTML5 non-void self-closing treated as open).
 
     Single finditer pass: the token regex only ever matches at '<', so
@@ -174,7 +175,7 @@ def tokenize_into(root: Node, html: str) -> None:
             if kind == IX_TEXT:  # bare '<'
                 stack[-1].append(node_cls(text_kind, data="<"))
                 continue
-            # decl / pi: dropped, same as the stdlib builder
+            # decl / pi: dropped
 
     if pos < n:
         stack[-1].append(Node(TEXT, data=_unescape(html[pos:])))

@@ -1,10 +1,10 @@
-"""Minimal HTML DOM on top of the stdlib parser.
+"""The extraction cascade's HTML DOM, built by the _cdom C kernel.
 
 The reference uses golang.org/x/net/html (a spec-compliant HTML5
-parser). This sandbox has no lxml/bs4/selectolax, so we build a small
-forgiving DOM over html.parser.HTMLParser that reproduces the pieces
-the extraction cascade relies on (/root/reference/core.go usage of
-go-shiori/dom):
+parser). This sandbox has no lxml/bs4/selectolax, so the C tokenizer
+in _cdom.c (built by cnative) builds a small forgiving DOM that
+reproduces the pieces the extraction cascade relies on
+(/root/reference/core.go usage of go-shiori/dom):
 
 - document order traversal (DFS preorder) for getElementsByTagName
 - html/head/body synthesis when missing (x/net/html always creates them)
@@ -13,12 +13,17 @@ go-shiori/dom):
   raw text inside script/style/…): the extensive-search stages regex
   over this string and slice src_string out of it, so byte parity
   matters (core.go:212-219).
+
+fastparse.py's regex tokenizer builds the same tree; it parses the
+documents the C tokenizer refuses and is the parity oracle.
 """
 
 from __future__ import annotations
 
-from html.parser import HTMLParser
-from typing import Optional
+from html import unescape
+from html.entities import html5 as _html5_table
+
+from . import cnative as _cnative
 
 VOID_ELEMENTS = frozenset(
     "area base br col embed hr img input keygen link meta param source track wbr".split()
@@ -55,16 +60,26 @@ COMMENT = 2
 
 _NO_ATTRS: list = []
 
-# optional C accelerator: NodeBase (field layout + init) and the
-# tokenizer live in _cdom; the Python class below supplies every method
-# either way, so the two Node variants are behaviorally identical.
-from . import cnative as _cnative  # noqa: E402
-
+# the C kernel: NodeBase (field layout, __init__, attr) and the
+# tokenizer, traversals and serializer live in _cdom
 _CDOM = _cnative.get()
 
+# ';'-keyed entries only: the direct-hit branch of html.unescape's
+# _replace_charref. The C fast path substitutes exactly these (plus
+# plain-chr numeric charrefs) and falls back to html.unescape for
+# everything else (legacy no-semicolon names, the longest-prefix
+# rule), so it is byte-exact by construction.
+_CDOM.configure(
+    _NO_ATTRS,
+    unescape,
+    {k: v for k, v in _html5_table.items() if k.endswith(";")},
+)
 
-class _NodeOps:
-    """Node methods shared by the pure-Python and C-backed variants."""
+
+class Node(_CDOM.NodeBase):
+    """DOM node: field storage, __init__ and attr() (lazy parse, first
+    occurrence wins, like x/net/html) in _cdom.NodeBase (kind, tag,
+    _attrs, _raw_attrs, children, parent, data); tree helpers here."""
 
     __slots__ = ()
 
@@ -74,12 +89,7 @@ class _NodeOps:
         elements' attributes are never inspected). Treated as immutable
         after creation — clones share the list."""
         if self._attrs is None:
-            if _CDOM is not None:
-                self._attrs = _CDOM.parse_attrs(self._raw_attrs or "")
-            else:
-                from .fastparse import _parse_attrs
-
-                self._attrs = _parse_attrs(self._raw_attrs or "")
+            self._attrs = _CDOM.parse_attrs(self._raw_attrs or "")
         return self._attrs
 
     @attrs.setter
@@ -96,13 +106,6 @@ class _NodeOps:
             self.parent.children.remove(self)
             self.parent = None
 
-    # -- attribute access (first occurrence wins, like x/net/html) ------
-    def attr(self, name: str) -> str:
-        for k, v in self.attrs:
-            if k == name:
-                return v
-        return ""
-
     @property
     def id(self) -> str:
         return self.attr("id")
@@ -114,19 +117,8 @@ class _NodeOps:
     # -- traversal ------------------------------------------------------
     def iter_elements(self) -> list["Node"]:
         """All descendant elements, DFS preorder (document order) —
-        matches go-shiori/dom GetElementsByTagName(root, "*"). Returns a
-        list: every caller consumes the full traversal, and a tight loop
-        beats generator frame switches on large pages."""
-        out: list["Node"] = []
-        push = out.append
-        stack = list(reversed(self.children))
-        while stack:
-            node = stack.pop()
-            if node.kind == ELEMENT:
-                push(node)
-                if node.children:
-                    stack.extend(reversed(node.children))
-        return out
+        matches go-shiori/dom GetElementsByTagName(root, "*")."""
+        return _CDOM.iter_elements(self)
 
     def elements_by_tag(self, tag: str) -> list["Node"]:
         return [e for e in self.iter_elements() if e.tag == tag]
@@ -174,52 +166,6 @@ class _NodeOps:
         return root
 
 
-if _CDOM is not None:
-    from html.entities import html5 as _html5_table
-
-    # ';'-keyed entries only: the direct-hit branch of html.unescape's
-    # _replace_charref. The C fast path substitutes exactly these (plus
-    # plain-chr numeric charrefs) and falls back to html.unescape for
-    # everything else (legacy no-semicolon names, the longest-prefix
-    # rule), so it is byte-exact by construction.
-    _CDOM.configure(
-        _NO_ATTRS,
-        __import__("html").unescape,
-        {k: v for k, v in _html5_table.items() if k.endswith(";")},
-    )
-
-    class Node(_NodeOps, _CDOM.NodeBase):  # type: ignore[misc]
-        """C-backed Node: field storage + __init__ in _cdom.NodeBase
-        (kind, tag, _attrs, _raw_attrs, children, parent, data), all
-        methods from _NodeOps."""
-
-        __slots__ = ()
-
-        # C twin of _NodeOps.attr (lazy parse + first-occurrence scan);
-        # shadows the mixin so the meta scan's 7-attrs-per-element probe
-        # stays frameless
-        attr = _CDOM.NodeBase.attr
-
-        def iter_elements(self) -> list["Node"]:
-            return _CDOM.iter_elements(self)
-
-else:
-
-    class Node(_NodeOps):  # type: ignore[no-redef]
-        __slots__ = (
-            "kind", "tag", "_attrs", "_raw_attrs", "children", "parent", "data"
-        )
-
-        def __init__(self, kind: int, tag: str = "", data: str = ""):
-            self.kind = kind
-            self.tag = tag
-            self._attrs: Optional[list[tuple[str, str]]] = _NO_ATTRS
-            self._raw_attrs: Optional[str] = None
-            self.children: list["Node"] = []
-            self.parent: Optional["Node"] = None
-            self.data = data
-
-
 def _escape(s: str) -> str:
     """x/net/html escape set: & ' < > \" (render.go)."""
     return (
@@ -261,98 +207,21 @@ def render_children(node: Node, out: list[str]) -> None:
 
 
 def inner_html(node: Node) -> str:
-    if _CDOM is not None and isinstance(node, _CDOM.NodeBase):
-        return _CDOM.render_inner(node)
-    out: list[str] = []
-    render_children(node, out)
-    return "".join(out)
+    return _CDOM.render_inner(node)
 
 
-class _TreeBuilder(HTMLParser):
-    def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
-        self.root = Node(ELEMENT, "#root")
-        self.stack: list[Node] = [self.root]
-        self._open_p = 0  # open <p> count; avoids O(depth) scans per tag
-
-    def _implied_close(self, tag: str) -> None:
-        if tag in _P_CLOSERS and self._open_p > 0:
-            while len(self.stack) > 1:  # pop to and through the open <p>
-                node = self.stack.pop()
-                if node.tag == "p":
-                    self._open_p -= 1
-                    break
-        elif tag in _SELF_CLOSERS and self.stack[-1].tag in _SELF_CLOSERS[tag]:
-            self.stack.pop()
-
-    # -- HTMLParser hooks -------------------------------------------------
-    def handle_starttag(self, tag: str, attrs) -> None:
-        self._implied_close(tag)
-        node = Node(ELEMENT, tag)
-        node.attrs = [(k, v if v is not None else "") for k, v in attrs]
-        self.stack[-1].append(node)
-        if tag not in VOID_ELEMENTS:
-            self.stack.append(node)
-            if tag == "p":
-                self._open_p += 1
-
-    def handle_startendtag(self, tag: str, attrs) -> None:
-        # HTML5: the trailing slash on a non-void tag is ignored — `<html/>`
-        # OPENS html (x/net/html does the same). True self-closing only
-        # exists in foreign content (svg/math), which the cascade discards.
-        if tag in VOID_ELEMENTS or tag in ("svg", "math"):
-            node = Node(ELEMENT, tag)
-            node.attrs = [(k, v if v is not None else "") for k, v in attrs]
-            self.stack[-1].append(node)
-        else:
-            self.handle_starttag(tag, attrs)
-
-    def handle_endtag(self, tag: str) -> None:
-        for i in range(len(self.stack) - 1, 0, -1):
-            if self.stack[i].tag == tag:
-                if self._open_p:
-                    self._open_p -= sum(
-                        1 for n in self.stack[i:] if n.tag == "p"
-                    )
-                del self.stack[i:]
-                return
-        # stray end tag: ignored (forgiving, like HTML5 parse errors)
-
-    def handle_data(self, data: str) -> None:
-        if data:
-            self.stack[-1].append(Node(TEXT, data=data))
-
-    def handle_comment(self, data: str) -> None:
-        self.stack[-1].append(Node(COMMENT, data=data))
-
-
-def parse_html(html: str, fast: bool = True) -> Node:
+def parse_html(html: str) -> Node:
     """Parse and normalize into a document with html/head/body, like
-    x/net/html does for any input. Uses the regex tokenizer (≈4× faster)
-    with the stdlib html.parser builder as the fallback path."""
-    raw_root = None
-    if fast:
-        if _CDOM is not None:
-            try:
-                raw_root = Node(ELEMENT, "#root")
-                _CDOM.build_into(raw_root, html)
-            except Exception:
-                raw_root = None  # partial tree discarded; reparse below
-        if raw_root is None:
-            try:
-                from .fastparse import build_tree
+    x/net/html does for any input. The C tokenizer refuses tag names of
+    256+ bytes and lone surrogates (ValueError); those documents go
+    through the regex tokenizer, which builds the same tree."""
+    raw_root = Node(ELEMENT, "#root")
+    try:
+        _CDOM.build_into(raw_root, html)
+    except ValueError:
+        from .fastparse import build_tree  # fastparse imports this module
 
-                raw_root = build_tree(html)
-            except Exception:
-                raw_root = None
-    if raw_root is None:
-        builder = _TreeBuilder()
-        try:
-            builder.feed(html)
-            builder.close()
-        except Exception:
-            pass  # keep whatever tree we built; forgiving parse
-        raw_root = builder.root
+        raw_root = build_tree(html)
 
     doc = Node(ELEMENT, "#document")
 
@@ -431,12 +300,4 @@ def release_tree(root: Node) -> None:
     wall in the hot loop (gctune.py pairs with this). Safe after
     extraction: results are plain strings; only parent traversal on a
     kept subtree would notice."""
-    if _CDOM is not None and hasattr(_CDOM, "release_tree"):
-        _CDOM.release_tree(root)
-        if isinstance(root, _CDOM.NodeBase):
-            return  # handled in C
-    stack = [root]
-    while stack:
-        n = stack.pop()
-        n.parent = None
-        stack.extend(c for c in n.children if isinstance(c, Node))
+    _CDOM.release_tree(root)

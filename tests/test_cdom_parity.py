@@ -11,6 +11,7 @@ extensive-search stages regex over, so byte parity matters twice.
 from __future__ import annotations
 
 import glob
+from pathlib import Path
 
 import pytest
 
@@ -29,14 +30,9 @@ def pure_inner_html(node: Node) -> str:
 
 
 def inner_html(node: Node) -> str:
-    """C serializer when available (what production inner_html uses)."""
-    if cdom is not None:
-        return cdom.render_inner(node)
-    return pure_inner_html(node)
+    """The C serializer (what production inner_html uses)."""
+    return cdom.render_inner(node)
 
-pytestmark = pytest.mark.skipif(
-    cdom is None, reason="C DOM accelerator unavailable (no compiler?)"
-)
 
 MOCK_PAGES = sorted(glob.glob("/root/reference/test-files/mock/*.html"))
 
@@ -248,7 +244,7 @@ def test_eval_corpus_sample_parity():
     """Tree parity over a slice of the real 1000-doc eval corpus."""
     import sys
 
-    sys.path.insert(0, "/root/repo/scripts")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "scripts"))
     from eval_corpus import find_file, load_entries
 
     docs = 0
@@ -477,15 +473,27 @@ def test_fast_unescape_applies_to_attr_values():
     assert got == H.unescape("a &amp; b &ampere; &#8217; &#x10FFFF;")
 
 
-def test_c_attr_method_matches_python_mixin():
-    """Node.attr on the C class is _cdom.NodeBase.attr; it must match
-    _NodeOps.attr exactly: lazy raw-attrs parse, first occurrence wins,
-    '' for missing, and cached list reuse after manual assignment."""
-    html = '<meta NAME="date" name="shadowed" content="2020-01-02" flag>'
-    c = _c_build_tree(html).elements_by_tag("meta")[0]
-    p = py_build_tree(html).elements_by_tag("meta")[0]
-    for name in ("name", "content", "flag", "missing", "NAME"):
-        assert c.attr(name) == p.attr(name), name
+def test_c_attr_matches_first_occurrence_scan():
+    """Node.attr is _cdom.NodeBase.attr; it must match a first-occurrence
+    scan over the regex attribute parser: lazy raw-attrs parse, first
+    occurrence wins, '' for missing, and cached list reuse after manual
+    assignment."""
+    from go_htmldate_spark.dom.fastparse import _parse_attrs
+
+    def first(pairs, name):
+        return next((v for k, v in pairs if k == name), "")
+
+    for raw in (
+        ' NAME="date" name="shadowed" content="2020-01-02" flag',
+        " id='' ID=x class=a CLASS=b",
+        " a=&amp;b A='2' data-x data-x=3",
+    ):
+        c = _c_build_tree(f"<meta{raw}>").elements_by_tag("meta")[0]
+        assert c._attrs is None  # attr() must parse lazily
+        pairs = _parse_attrs(raw)
+        for name in ("name", "content", "flag", "missing", "NAME",
+                     "id", "class", "a", "data-x"):
+            assert c.attr(name) == first(pairs, name), (raw, name)
     # manual assignment path (clone() shares parsed lists)
     c2 = _c_build_tree("<div></div>").elements_by_tag("div")[0]
     c2.attrs = [("k", "v"), ("k", "v2")]
@@ -598,24 +606,31 @@ def test_scan_prelude_mock_parity(path):
     "path", MOCK_PAGES, ids=[p.rsplit("/", 1)[1] for p in MOCK_PAGES]
 )
 def test_prelude_end_to_end_parity(path):
-    """from_html must be bit-identical with the prelude forced off —
-    over every golden page, in both date modes."""
-    from go_htmldate_spark import cascade as casc
+    """from_html (tree-free prelude first) must be bit-identical with the
+    tree pipeline alone — over every golden page, in both date modes."""
     from go_htmldate_spark.operators.extract import sniff_decode
+
+    _prelude_equals_tree(sniff_decode(open(path, "rb").read()))
+
+
+@pytest.mark.parametrize(
+    "html",
+    _PRELUDE_HAZARD_CASES + _PRELUDE_SAFE_CASES,
+    ids=range(len(_PRELUDE_HAZARD_CASES) + len(_PRELUDE_SAFE_CASES)),
+)
+def test_prelude_end_to_end_edge_parity(html):
+    _prelude_equals_tree(html)
+
+
+def _prelude_equals_tree(html: str) -> None:
+    from go_htmldate_spark import cascade as casc
     from go_htmldate_spark.options import Options
 
-    html = sniff_decode(open(path, "rb").read())
-    saved = casc._PRELUDE_ENABLED
-    try:
-        for orig in (False, True):
-            opts = Options(use_original_date=orig, skip_extensive_search=True)
-            casc._PRELUDE_ENABLED = True
-            a = casc.from_html(html, opts)
-            casc._PRELUDE_ENABLED = False
-            b = casc.from_html(html, opts)
-            assert a == b
-    finally:
-        casc._PRELUDE_ENABLED = saved
+    for orig in (False, True):
+        opts = Options(use_original_date=orig, skip_extensive_search=True)
+        a = casc.from_html(html, opts)
+        b = casc.from_document(domp.parse_html(html), opts)
+        assert a == b
 
 
 try:

@@ -31,6 +31,22 @@ TEST_ORACLES = {
         "sketches: single-threaded HyperLogLog reference for hll_estimate",
     "write_bucketed_corpus":
         "scheduler: writes the bucketed table that fetch_join(mode='bucketed') reads",
+    "render_children":
+        "parser: pure-Python serializer that _cdom.render_inner must equal byte for byte",
+    "_escape":
+        "parser: render_children's x/net/html escape set",
+    "_parse_attrs":
+        "fastparse: regex attribute parser that _cdom.parse_attrs and NodeBase.attr must equal",
+    "slow_date":
+        "selectors: full-search date rule that _cdom.filter_date(fast=False) must equal",
+    "fast_date":
+        "selectors: skip-extensive date rule that _cdom.filter_date(fast=True) must equal",
+    "date_rule":
+        "selectors: attribute predicate shared by slow_date and fast_date",
+    "_str_or":
+        "selectors: date_rule's strOr short-circuit",
+    "discard_rule":
+        "selectors: archive.org banner rule that _cdom.prune_and_collect must apply",
 }
 
 
