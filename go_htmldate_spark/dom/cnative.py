@@ -46,21 +46,21 @@ def _cache_dir() -> str:
 def _build(src: bytes, out: str) -> None:
     include = sysconfig.get_paths()["include"]
     cmd = shlex.split(os.environ.get("CC") or "gcc") + [
-        "-O2", "-fPIC", "-shared", f"-I{include}", "-x", "c", "-",
+        "-O2", "-fPIC", "-shared", f"-I{include}", "-x", "c", "-", "-o",
     ]
+    tmp = None
     try:
         os.makedirs(os.path.dirname(out), exist_ok=True)
         fd, tmp = tempfile.mkstemp(suffix=".so", dir=os.path.dirname(out))
         os.close(fd)
-    except OSError as e:
-        raise ImportError(f"cannot write the C DOM kernel build: {e}") from e
-    cmd += ["-o", tmp]
-    try:
-        proc = subprocess.run(cmd, input=src, capture_output=True, timeout=120)
+        proc = subprocess.run(
+            cmd + [tmp], input=src, capture_output=True, timeout=120
+        )
         if proc.returncode != 0:
             raise ImportError(
                 f"building the C DOM kernel failed (exit {proc.returncode}): "
-                f"{shlex.join(cmd)}\n{proc.stderr.decode(errors='replace')}"
+                f"{shlex.join(cmd + [tmp])}\n"
+                f"{proc.stderr.decode(errors='replace')}"
             )
         os.replace(tmp, out)
     except (OSError, subprocess.SubprocessError) as e:
@@ -68,7 +68,7 @@ def _build(src: bytes, out: str) -> None:
             f"building the C DOM kernel failed: {shlex.join(cmd)}: {e}"
         ) from e
     finally:
-        if os.path.exists(tmp):
+        if tmp is not None and os.path.exists(tmp):
             os.unlink(tmp)
 
 
