@@ -199,36 +199,62 @@ def minhash_signatures(
     )
 
 
-def bucket_candidate_pairs(
-    banded: DataFrame, id_col: str, max_bucket: int
-) -> DataFrame:
-    """(id, band, bucket) → distinct candidate pairs (a < b) sharing a
-    bucket. Each bucket is bounded at its max_bucket SMALLEST ids (skew
-    guard for boilerplate that all hashes together); pair fan-out happens
-    bucket-locally, no self-join of the banded table.
+def _cap_buckets(banded: DataFrame, id_col: str, max_bucket: int) -> DataFrame:
+    """Keep the max_bucket SMALLEST ids of each (band, bucket) group —
+    the skew guard for boilerplate that all hashes together.
 
-    Scale note: the cap is applied with a row_number window BEFORE the
-    collect_list, so a boilerplate mega-bucket (10^7 identical pages in
-    one band bucket at 100 TB) streams through the window's sort-based
-    processing and is dropped to max_bucket rows before any aggregation
-    buffer materializes it. The window partitions on the same
-    (band, bucket) key as the groupBy, so Catalyst reuses one exchange —
-    plan-pinned in test_plan_shape.py. Semantics are identical to the
-    previous slice(sort_array(collect_list)) form (keep the max_bucket
-    smallest ids): the LSH oracles stay hash-exact."""
+    Scale note: the cap is a row_number window, not a slice of the
+    collected list, so a boilerplate mega-bucket (10^7 identical pages
+    in one band bucket at 100 TB) streams through the window's
+    sort-based processing and is cut to max_bucket rows before any
+    aggregation buffer materializes it. A groupBy on the same
+    (band, bucket) key after it reuses the window's exchange —
+    plan-pinned in test_plan_shape.py."""
     from pyspark.sql import Window
 
     w = Window.partitionBy("band", "bucket").orderBy(F.col(id_col).asc())
-    capped = (
+    return (
         banded.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= max_bucket)
         .drop("_rn")
     )
-    buckets = (
-        capped.groupBy("band", "bucket")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
-        .filter(F.size("ids") > 1)
+
+
+def _bucket_rows(
+    banded: DataFrame, id_col: str, max_bucket: int, *payload: str
+) -> DataFrame:
+    """Capped (band, bucket) groups with at least two members, one row
+    each: `ids` ascending, plus one array per payload column aligned
+    with it. Members are collected as structs, so a null payload keeps
+    its slot; null ids drop after the cap, as collect_list drops them.
+
+    The rows are spread round-robin over the session's cores: AQE
+    coalesces the byte-small aggregate to 1-2 post-shuffle partitions,
+    which would serialize the per-bucket pair work onto 1-2 cores
+    (r06). Per-bucket output does not depend on the partitioning."""
+    members = F.sort_array(F.collect_list(F.struct(id_col, *payload)))
+    rows = (
+        _cap_buckets(banded, id_col, max_bucket)
+        .filter(F.col(id_col).isNotNull())
+        .groupBy("band", "bucket")
+        .agg(members.alias("_m"))
+        .filter(F.size("_m") > 1)
+        .select(
+            F.col("_m")[id_col].alias("ids"),
+            *[F.col("_m")[c].alias(c) for c in payload],
+        )
     )
+    return rows.repartition(banded.sparkSession.sparkContext.defaultParallelism)
+
+
+def bucket_candidate_pairs(
+    banded: DataFrame, id_col: str, max_bucket: int
+) -> DataFrame:
+    """(id, band, bucket) → distinct candidate pairs (a < b) sharing a
+    bucket. Each bucket is bounded at its max_bucket SMALLEST ids
+    (`_cap_buckets`); pair fan-out happens bucket-locally, no self-join
+    of the banded table."""
+    buckets = _bucket_rows(banded, id_col, max_bucket)
     # pair fan-out as two chained generates over the SORTED ids array:
     # a at position i pairs with the slice after it (ids are distinct
     # and ascending, so the tail is exactly {b > a}). The previous
@@ -236,15 +262,6 @@ def bucket_candidate_pairs(
     # bucket²-sized array of structs per bucket row in interpreted HOFs
     # before exploding — measured 1.5x slower at 9.4M pairs (r06) for
     # the same output set.
-    #
-    # Spread the byte-small bucket rows first: AQE coalesces the
-    # aggregate to 1-2 post-shuffle partitions, which would serialize
-    # the bucket²-row explode onto 1-2 cores (r06; same fix as the
-    # numpy bucket passes). Round-robin — pair rows are
-    # partitioning-invariant and the distinct re-shuffles anyway.
-    buckets = buckets.repartition(
-        banded.sparkSession.sparkContext.defaultParallelism
-    )
     return (
         buckets.select("ids", F.posexplode("ids").alias("_i", "a"))
         .select(
@@ -270,6 +287,14 @@ def band_signatures(
     hashed_buckets=True compresses each band slice to an xxhash64 key
     (the at-scale shape); False keeps the raw comma-joined slice string
     so the bucket key is reproducible in the DuckDB oracle."""
+    return signatures.select(
+        F.col(id_col),
+        F.posexplode(_band_keys(bands, hashed_buckets)).alias("band", "bucket"),
+    )
+
+
+def _band_keys(bands: int, hashed_buckets: bool) -> Column:
+    """The `minhash` column's per-band bucket keys, as one array."""
     sig = F.col("minhash")
     rows_per_band = F.size(sig) / F.lit(bands)
 
@@ -284,12 +309,7 @@ def band_signatures(
         )
         return F.xxhash64(slice_str, b) if hashed_buckets else slice_str
 
-    return signatures.select(
-        F.col(id_col),
-        F.posexplode(
-            F.transform(F.sequence(F.lit(0), F.lit(bands - 1)), band_key)
-        ).alias("band", "bucket"),
-    )
+    return F.transform(F.sequence(F.lit(0), F.lit(bands - 1)), band_key)
 
 
 def lsh_candidate_pairs(
@@ -305,6 +325,12 @@ def lsh_candidate_pairs(
     return bucket_candidate_pairs(banded, id_col, max_bucket)
 
 
+def _distinct_tokens(text_col: str) -> Column:
+    """The Jaccard token set: whitespace-normalized, lowercased words."""
+    norm = F.lower(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " ")))
+    return F.array_distinct(F.split(norm, " "))
+
+
 def lsh_jaccard_verified_pairs(
     df: DataFrame,
     signatures: DataFrame,
@@ -315,49 +341,36 @@ def lsh_jaccard_verified_pairs(
     hashed_buckets: bool = True,
     min_jaccard: float = 0.5,
 ) -> DataFrame:
-    """lsh_candidate_pairs + jaccard_verify_pairs FUSED: value-identical
-    rows (pinned in tests) without ever materializing the candidate
-    pairs as Spark rows. The candidate set is typically 100-1000x the
-    verified set, so the explode + distinct exchange over it, and the
-    token-array join behind it, dominate the composed pipeline (guide
-    §8: decide with small rows). When the corpus token sets fit the
-    bounded broadcast budget, each capped bucket's sorted id list walks
-    its own pairs in Python against the broadcast sets, keeps pairs
-    whose integer (|A∩B|, |A∪B|) clear the threshold minus a margin,
-    and only those integers come back; Spark re-derives the exact
-    double division, threshold, and rounding, so boundary behavior is
-    bit-identical to the inline form. Above the budget the inline
-    compose runs unchanged — the 100 TB shape."""
-    toks = df.select(
+    """lsh_candidate_pairs + exact distinct-token Jaccard in one pass:
+    the rows of the lsh_candidate_pairs → jaccard_verify_pairs
+    composition (pinned in tests) without ever materializing the
+    candidate pairs as Spark rows. The candidate set is typically
+    100-1000x the verified set, so its explode + distinct exchange and
+    the token-array join behind it would dominate (guide §8: decide
+    with small rows).
+
+    Each document's distinct-token array joins its signature BEFORE the
+    band explode, so every capped (band, bucket) row carries its
+    members' token arrays (LCJoin's per-group verify). One Python pass
+    walks each bucket's pairs, keeps those whose integer
+    (|A∩B|, |A∪B|) clear the threshold minus a margin, and only those
+    integers come back; Spark re-derives the exact double division,
+    threshold and rounding, so boundary behavior is bit-identical to
+    jaccard_verify_pairs. Nothing is collected to or broadcast from the
+    driver. A null text has a null token array and pairs with nothing.
+
+    Ids are assumed unique in `df` and in `signatures`. A duplicated id
+    is not merged: each of its rows is scored with its own token set,
+    so an id pair can come back once per distinct (|A∩B|, |A∪B|) its
+    rows reach, and two rows that share an id never pair."""
+    toks = df.select(F.col(id_col), _distinct_tokens(text_col).alias("_t"))
+    # tokens join the signatures before the explode, not the banded
+    # rows after it: the join then moves one row per document instead
+    # of one per (document, band)
+    banded = signatures.join(toks, id_col).select(
         F.col(id_col),
-        F.array_distinct(
-            F.split(
-                F.lower(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " "))),
-                " ",
-            )
-        ).alias("_t"),
-    )
-    bc = _collect_token_sets(
-        toks, id_col, probe_df=df, probe_col=F.col(text_col)
-    )
-    if bc is None:
-        pairs = lsh_candidate_pairs(
-            signatures, id_col, bands, max_bucket, hashed_buckets
-        )
-        return jaccard_verify_pairs(
-            df, pairs, text_col, id_col, min_jaccard
-        )
-
-    from pyspark.sql import Window
-
-    banded = band_signatures(signatures, id_col, bands, hashed_buckets)
-    w = Window.partitionBy("band", "bucket").orderBy(F.col(id_col).asc())
-    buckets = (
-        banded.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= max_bucket)
-        .groupBy("band", "bucket")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
-        .filter(F.size("ids") > 1)
+        "_t",
+        F.posexplode(_band_keys(bands, hashed_buckets)).alias("band", "bucket"),
     )
     # keep-threshold with a 1e-9 cushion: the exact Spark-side filter
     # below re-decides the boundary from the exact integers, so the
@@ -367,21 +380,21 @@ def lsh_jaccard_verified_pairs(
     def gen(batches):
         import pandas as pd
 
-        sets = bc.value
         for pdf in batches:
             out_a, out_b, out_i, out_u = [], [], [], []
-            for ids in pdf["ids"]:
+            for ids, arrays in zip(pdf["ids"], pdf["_t"]):
+                ids = ids.tolist()
+                sets = [None if t is None else set(t) for t in arrays]
                 k = len(ids)
-                ss = [sets.get(i) for i in ids]
                 for x in range(k - 1):
-                    sa = ss[x]
+                    sa = sets[x]
                     if sa is None:
                         continue
                     a = ids[x]
                     la = len(sa)
                     for y in range(x + 1, k):
-                        sb = ss[y]
-                        if sb is None:
+                        sb = sets[y]
+                        if sb is None or ids[y] == a:
                             continue
                         inter = len(sa & sb)
                         union = la + len(sb) - inter
@@ -397,15 +410,11 @@ def lsh_jaccard_verified_pairs(
                 "_u": pd.Series(out_u, dtype="int64"),
             })
 
-    # spread the byte-small bucket rows before the Python pass: AQE
-    # coalesces the aggregate to 1-2 partitions, which would serialize
-    # the per-bucket set counting onto 1-2 cores (same fix as
-    # _bucket_pairs_prefiltered)
-    counts = buckets.select("ids").repartition(
-        df.sparkSession.sparkContext.defaultParallelism
-    ).mapInPandas(
-        gen, "a long, b long, _i long, _u long"
-    ).distinct()
+    counts = (
+        _bucket_rows(banded, id_col, max_bucket, "_t")
+        .mapInPandas(gen, "a long, b long, _i long, _u long")
+        .distinct()
+    )
     jac = F.col("_i").cast("double") / F.col("_u")
     return (
         counts.withColumn("jaccard", F.round(jac, 6))
@@ -440,18 +449,13 @@ def incremental_dedup(
     bucketed by (band, bucket)) never reshuffles — only the new
     batch's O(new × bands) rows move to it. A boilerplate mega-bucket
     on the corpus side is capped to its max_bucket smallest ids with
-    the same pre-collect row_number guard as `bucket_candidate_pairs`.
-    The signature re-join for Jaccard estimation touches only
-    colliding pairs."""
-    from pyspark.sql import Window
-
-    idx = band_signatures(corpus_sigs, id_col, bands, hashed_buckets)
-    w = Window.partitionBy("band", "bucket").orderBy(F.col(id_col).asc())
-    idx = (
-        idx.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= max_bucket)
-        .select(F.col(id_col).alias("_corpus_id"), "band", "bucket")
-    )
+    the same pre-collect row_number guard as `bucket_candidate_pairs`
+    (`_cap_buckets`). The signature re-join for Jaccard estimation
+    touches only colliding pairs."""
+    idx = _cap_buckets(
+        band_signatures(corpus_sigs, id_col, bands, hashed_buckets),
+        id_col, max_bucket,
+    ).select(F.col(id_col).alias("_corpus_id"), "band", "bucket")
     probes = band_signatures(new_sigs, id_col, bands, hashed_buckets)
     cand = (
         probes.join(idx, ["band", "bucket"])
@@ -782,52 +786,6 @@ def connected_components(
 # n-gram Jaccard (exact, for candidate verification / small scopes)
 # ---------------------------------------------------------------------------
 
-# broadcast budget for the verify token sets: total corpus TEXT bytes
-# held driver-side (bytes bound the token count; probing bytes needs
-# no tokenize pass). Same bounded-broadcast pattern as the md5
-# distinct-shingle table; sized so a 10x driver scale factor still
-# takes the fused path while a real web-scale corpus falls back.
-_TOKEN_SET_BUDGET_BYTES = 256 << 20
-
-
-def _collect_token_sets(toks, id_col, probe_df=None, probe_col=None):
-    """(id, token array) -> broadcast {id: frozenset[int]} under the
-    budget, else None. A bytes-only aggregate (a raw-text scan when
-    probe_df/probe_col point at the source column — no tokenize pass)
-    probes the corpus size first so an over-budget corpus never starts
-    the collect; the fetch rides Arrow (toPandas), tokens are interned
-    to small ints driver-side so the broadcast pickle stays compact,
-    and null token arrays map to None entries (pairs touching them
-    drop, matching the inline join's null-intersect behavior)."""
-    if probe_col is None:
-        probe_col = F.concat_ws(" ", "_t")
-    src = toks.select(F.col(id_col), F.col("_t"))
-    probe = (toks if probe_df is None else probe_df).agg(
-        F.count(F.lit(1)).alias("_n"),
-        F.sum(F.octet_length(probe_col)).alias("_b"),
-    ).head()
-    if probe["_n"] == 0 or (probe["_b"] or 0) > _TOKEN_SET_BUDGET_BYTES:
-        return None
-    pdf = src.toPandas()
-    vocab: dict = {}
-    sets = {}
-    ids = pdf[id_col].to_numpy()
-    for k, t in enumerate(pdf["_t"]):
-        if t is None:
-            sets[ids[k]] = None
-            continue
-        s = set()
-        for w in t:
-            v = vocab.get(w)
-            if v is None:
-                v = len(vocab)
-                vocab[w] = v
-            s.add(v)
-        sets[ids[k]] = frozenset(s)
-    sc = toks.sparkSession.sparkContext
-    return sc.broadcast(sets)
-
-
 def jaccard_verify_pairs(
     df: DataFrame,
     pairs: DataFrame,
@@ -835,19 +793,11 @@ def jaccard_verify_pairs(
     id_col: str = "doc_id",
     min_jaccard: float = 0.5,
 ) -> DataFrame:
-    """Exact distinct-token Jaccard over CANDIDATE pairs — the verify
-    stage of the LSH pipeline and the at-scale shape: cost is O(pairs),
-    never quadratic; the token-set join shuffles on the pair ids and the
-    intersection runs JVM-native (array_intersect)."""
-    toks = df.select(
-        F.col(id_col),
-        F.array_distinct(
-            F.split(
-                F.lower(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " "))),
-                " ",
-            )
-        ).alias("_t"),
-    )
+    """Exact distinct-token Jaccard over CANDIDATE pairs, cost O(pairs):
+    the token-set join shuffles on the pair ids and the intersection
+    runs JVM-native (array_intersect). The test reference for
+    lsh_jaccard_verified_pairs, which verifies inside the buckets."""
+    toks = df.select(F.col(id_col), _distinct_tokens(text_col).alias("_t"))
 
     # inline on purpose: r06 A/B'd a staged-intersect + barrier variant
     # (array_intersect spelled once) and it was 3x SLOWER (44.7 s vs
@@ -855,8 +805,8 @@ def jaccard_verify_pairs(
     # duplicated intersect once within the stage. A broadcast-token-set
     # Python pass over the pair stream was also A/B'd this round and
     # broke even (the collect+broadcast cost what the join saved); the
-    # winning shape is the bucket-fused lsh_jaccard_verified_pairs
-    # below, which never materializes the candidate pairs at all.
+    # winning shape is the bucket-fused lsh_jaccard_verified_pairs,
+    # which never materializes the candidate pairs at all.
     ta = toks.select(F.col(id_col).alias("a"), F.col("_t").alias("_ta"))
     tb = toks.select(F.col(id_col).alias("b"), F.col("_t").alias("_tb"))
     joined = pairs.join(ta, "a").join(tb, "b")

@@ -201,30 +201,18 @@ def _plane_literals(spark, plane_ids: list[int], dim: int, family: str):
     return planes
 
 
-def ann_selfjoin_pairs(
+def _ann_banded(
     embeddings: DataFrame,
     dim: int,
-    min_cosine: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 8,
-    n_tables: int = 8,
-    max_bucket: int = 1024,
-    hash_family: str = "xxhash64",
+    id_col: str,
+    vec_col: str,
+    n_planes: int,
+    n_tables: int,
+    hash_family: str,
 ) -> DataFrame:
-    """Batch ANN: all near-neighbor PAIRS (a < b, cosine ≥ min_cosine) —
-    the semantic-dedup primitive at 100 TB. Multi-table hyperplane LSH
-    buckets candidates (OR-amplified: any shared (table, signature)), the
-    bucket groupBy is the only shuffle of the full table, and candidates
-    are exactly reranked by cosine. hash_family 'md5' derives planes from
-    md5 so the DuckDB oracle reproduces bucketing bit-for-bit."""
-    from .dedup import _spread_input, bucket_candidate_pairs
-
-    # single-file corpora arrive as 1 scan task; spread the rows across
-    # cores before the n_tables·n_planes·dim signature arithmetic
-    # (guide §2.5) — per-row results are partitioning-invariant
-    raw = embeddings
-    embeddings = _spread_input(embeddings)
+    """(id, _v, band, bucket): one row per (vector, table) with the
+    table's sign-bit signature as the bucket key and the vector, as
+    array<double>, riding along for the per-bucket prefilter."""
     vec = F.col(vec_col).cast("array<double>")
 
     # planes as driver-side LITERAL arrays: the expression forms
@@ -263,29 +251,47 @@ def ann_selfjoin_pairs(
             *[sig_fold(t).cast("string") for t in range(n_tables)]
         )
 
-    banded = embeddings.select(
-        F.col(id_col), F.posexplode(sigs).alias("band", "bucket")
+    return embeddings.select(
+        F.col(id_col), vec.alias("_v"), F.posexplode(sigs).alias("band", "bucket")
     )
-    # guide §8: decide with small rows. When the vector matrix fits the
-    # broadcast budget, the bucket -> candidate-pair fan-out runs in
-    # numpy per bucket (one gram-matrix per bucket row) and emits ONLY
-    # pairs whose approximate cosine clears the threshold minus a
-    # margin — the 8.7M-row explode+distinct and the per-candidate
-    # cosine disappear together. The survivor set is a strict SUPERSET
-    # of the exact survivors within every bucket (margin + unknown-id
-    # pass-through), so the exact rerank below yields bit-identical
-    # rows (pinned against the inline path in tests). Above the budget
-    # the inline pure-Spark pairing runs unchanged.
-    # collect from the UNSPREAD input: the broadcast needs values only,
-    # and the spread exchange would make the bounded fetch pay a full
-    # shuffle for nothing
-    bc = _collect_vector_broadcast(raw, id_col, vec, dim)
-    if bc is not None:
-        pairs = _bucket_pairs_prefiltered(
-            banded, id_col, max_bucket, bc, float(min_cosine)
-        )
-    else:
-        pairs = bucket_candidate_pairs(banded, id_col, max_bucket)
+
+
+def ann_selfjoin_pairs(
+    embeddings: DataFrame,
+    dim: int,
+    min_cosine: float = 0.9,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    n_planes: int = 8,
+    n_tables: int = 8,
+    max_bucket: int = 1024,
+    hash_family: str = "xxhash64",
+) -> DataFrame:
+    """Batch ANN: all near-neighbor PAIRS (a < b, cosine ≥ min_cosine) —
+    the semantic-dedup primitive at 100 TB. Multi-table hyperplane LSH
+    buckets candidates (OR-amplified: any shared (table, signature)),
+    each capped bucket row carries its members' vectors and is
+    prefiltered in numpy, and the survivors are exactly reranked by
+    cosine. hash_family 'md5' derives planes from md5 so the DuckDB
+    oracle reproduces bucketing bit-for-bit.
+
+    Ids are assumed unique. A duplicated id is not merged: each of its
+    rows is bucketed and prefiltered with its own vector, an id pair
+    that survives is reranked against every row of both ids (one output
+    row per passing vector pair), and two rows that share an id never
+    pair."""
+    from .dedup import _spread_input
+
+    # single-file corpora arrive as 1 scan task; spread the rows across
+    # cores before the n_tables·n_planes·dim signature arithmetic
+    # (guide §2.5) — per-row results are partitioning-invariant
+    embeddings = _spread_input(embeddings)
+    banded = _ann_banded(
+        embeddings, dim, id_col, vec_col, n_planes, n_tables, hash_family
+    )
+    pairs = _bucket_pairs_prefiltered(
+        banded, id_col, max_bucket, dim, float(min_cosine)
+    )
 
     # rerank stays INLINE (not staged) on purpose: r06 A/B'd a
     # staged-norm variant (norm per vector instead of per pair) and a
@@ -295,6 +301,7 @@ def ann_selfjoin_pairs(
     # tree once, while staging splits the stage and adds projection /
     # Generate overhead. Unrolling (below) is orthogonal: it keeps the
     # inline shape but swaps interpreted HOF folds for codegen.
+    vec = F.col(vec_col).cast("array<double>")
     va = embeddings.select(F.col(id_col).alias("a"), vec.alias("_va"))
     vb = embeddings.select(F.col(id_col).alias("b"), vec.alias("_vb"))
     # the rerank cosine stays in HOF form DELIBERATELY: r06 A/B'd (a)
@@ -316,92 +323,48 @@ def ann_selfjoin_pairs(
     )
 
 
-# broadcast budget for the prefilter matrix: doubles held driver-side
-# (128 MB; each reused Python worker holds one copy, so local sessions
-# pay workers x budget RAM — sized so a 10x driver scale factor still
-# takes the fast path while a real web-scale corpus falls back)
-_PREFILTER_BUDGET_DOUBLES = 16_000_000
-
-
-def _collect_vector_broadcast(embeddings, id_col, vec, dim):
-    """(id, vector) matrix as a numpy broadcast, or None above budget.
-    One bounded collect (limit cap+1 probes the size and fetches the
-    rows in the same job); null/ragged vectors are dropped — the exact
-    rerank nulls them out anyway — and missing ids are passed through
-    by the prefilter conservatively."""
-    import numpy as np
-
-    cap = max(1, _PREFILTER_BUDGET_DOUBLES // max(dim, 1))
-    pdf = (
-        embeddings.select(F.col(id_col).cast("long").alias("_id"), vec.alias("_v"))
-        .limit(cap + 1)
-        .toPandas()  # Arrow fetch — far cheaper than row-pickled collect
-    )
-    if len(pdf) > cap:
-        return None
-    ids, vecs = [], []
-    for i, v in zip(pdf["_id"].to_numpy(), pdf["_v"]):
-        if v is not None and len(v) == dim:
-            ids.append(i)
-            vecs.append(v)
-    if not ids:
-        return None
-    ids_a = np.asarray(ids, dtype=np.int64)
-    mat = np.asarray(vecs, dtype=np.float64)
-    order = np.argsort(ids_a)
-    sc = embeddings.sparkSession.sparkContext
-    return sc.broadcast((ids_a[order], mat[order]))
-
-
 def _bucket_pairs_prefiltered(
-    banded, id_col, max_bucket: int, bc, min_cosine: float,
+    banded, id_col, max_bucket: int, dim: int, min_cosine: float,
     margin: float = 1e-6,
 ):
     """bucket_candidate_pairs semantics with the pair fan-out fused
-    into a per-bucket numpy gram matrix: each (band, bucket) row's
-    capped, sorted id list looks its vectors up in the broadcast
-    matrix, M @ M.T scores every pair at once, and only pairs whose
-    approximate cosine clears (min_cosine - margin) — plus any pair
-    with an id the matrix lacks, conservatively — are emitted. The
-    output is a subset of bucket_candidate_pairs(...) that is still a
-    superset of the exact-cosine survivors, so an exact rerank over it
-    returns bit-identical rows. The 50-5000x non-surviving candidate
-    mass never materializes as Spark rows."""
-    from pyspark.sql import Window
+    into a per-bucket numpy gram matrix: each capped (band, bucket)
+    row carries its members' vectors, M @ M.T scores every pair at
+    once, and only pairs whose approximate cosine clears
+    (min_cosine - margin) are emitted. A member whose vector is null
+    or not `dim` long, and a pair whose score is not finite, pass
+    through unscored. The output is a subset of
+    bucket_candidate_pairs(...) that is still a superset of the
+    exact-cosine survivors, so an exact rerank over it returns
+    bit-identical rows. The 50-5000x non-surviving candidate mass
+    never materializes as Spark rows."""
+    from .dedup import _bucket_rows
 
     thr = float(min_cosine) - float(margin)
-
-    w = Window.partitionBy("band", "bucket").orderBy(F.col(id_col).asc())
-    capped = (
-        banded.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= max_bucket)
-        .drop("_rn")
-    )
-    buckets = (
-        capped.groupBy("band", "bucket")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
-        .filter(F.size("ids") > 1)
-    )
 
     def gen(batches):
         import numpy as np
         import pandas as pd
 
-        ids_all, mat = bc.value
-        norms = np.sqrt(np.einsum("ij,ij->i", mat, mat))
         empty = np.array([], dtype=np.int64)
         for pdf in batches:
             out_a, out_b = [], []
-            for ids in pdf["ids"]:
+            for ids, vecs in zip(pdf["ids"], pdf["_v"]):
                 iv = np.asarray(ids, dtype=np.int64)
-                idx = np.searchsorted(ids_all, iv)
-                np.clip(idx, 0, len(ids_all) - 1, out=idx)
-                known = ids_all[idx] == iv
-                M = mat[idx]
-                nn = np.outer(norms[idx], norms[idx])
-                keep = (M @ M.T >= thr * nn) | ~known[None, :] | ~known[:, None]
+                known = np.array([v is not None and len(v) == dim for v in vecs])
+                M = np.zeros((len(iv), dim))
+                if known.any():
+                    M[known] = np.stack([v for v, k in zip(vecs, known) if k])
+                norms = np.sqrt(np.einsum("ij,ij->i", M, M))
+                G = M @ M.T
+                keep = (
+                    (G >= thr * np.outer(norms, norms))
+                    | ~np.isfinite(G)
+                    | ~known[None, :] | ~known[:, None]
+                )
                 iu, ju = np.triu_indices(len(iv), k=1)
-                sel = keep[iu, ju]
+                # ids ascend, so a < b; equal ids are one id's two rows
+                sel = keep[iu, ju] & (iv[iu] < iv[ju])
                 out_a.append(iv[iu[sel]])
                 out_b.append(iv[ju[sel]])
             yield pd.DataFrame({
@@ -409,15 +372,11 @@ def _bucket_pairs_prefiltered(
                 "b": np.concatenate(out_b) if out_b else empty,
             })
 
-    # AQE coalesces the byte-small bucket aggregate to 1-2 post-shuffle
-    # partitions, which would serialize the numpy pair generation onto
-    # 1-2 cores (measured r06: 2 tasks for 8.7M pairs of gram-matrix
-    # work); round-robin the O(buckets) rows across the session's
-    # parallelism first — per-bucket output is partitioning-invariant
-    sel = buckets.select("ids").repartition(
-        banded.sparkSession.sparkContext.defaultParallelism
+    return (
+        _bucket_rows(banded, id_col, max_bucket, "_v")
+        .mapInPandas(gen, "a long, b long")
+        .distinct()
     )
-    return sel.mapInPandas(gen, "a long, b long").distinct()
 
 
 # ---------------------------------------------------------------------------

@@ -112,6 +112,10 @@ def prepare_host_edges(
 _HOSTGRAPH_EDGE_CAP = 200_000
 
 
+# cap for host_trustrank's driver-side seed collect (distinct seeds)
+_TRUSTRANK_SEED_CAP = _HOSTGRAPH_EDGE_CAP
+
+
 def _collect_small_edges(edges, src_col, dst_col):
     """Cleaned DISTINCT (src, dst) edge list when it fits the cap,
     else None — limit-bounded so an over-cap graph never materializes
@@ -717,14 +721,16 @@ def host_trustrank(
         # pinned exact-integer law (see host_pagerank); the seed and
         # width guards raise identically to the distributed path.
         small = _collect_small_edges(edges, src_col, dst_col)
-        if small is not None:
+        # limit-bounded like the edge collect: an over-cap seed set
+        # takes the distributed path, whose semi-join keeps only the
+        # seeds in the graph
+        seed_rows = None if small is None else (
+            seeds.select(F.col(seed_col).alias("host"))
+            .distinct().limit(_TRUSTRANK_SEED_CAP + 1).collect()
+        )
+        if seed_rows is not None and len(seed_rows) <= _TRUSTRANK_SEED_CAP:
             nodes_s = {s for s, _ in small} | {d for _, d in small}
-            sd = [
-                r["host"]
-                for r in seeds.select(F.col(seed_col).alias("host"))
-                .distinct().collect()
-                if r["host"] in nodes_s
-            ]
+            sd = [r["host"] for r in seed_rows if r["host"] in nodes_s]
             if not sd:
                 raise ValueError(
                     "need at least one seed host present in the graph"

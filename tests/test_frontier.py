@@ -1008,6 +1008,31 @@ def test_host_trustrank_matches_reference_and_demotes_spam(spark):
         )
 
 
+
+def test_host_trustrank_over_cap_seed_set_runs_distributed(spark, monkeypatch):
+    """The driver-side seed collect is bounded: a distinct seed set over
+    the cap takes the distributed sweeps (the driver law is never
+    called) and still equals the reference."""
+    from go_htmldate_spark.plans import hostgraph as H
+
+    ref = H.host_trustrank_py
+    edges = [("s0", "g0"), ("s0", "g1"), ("g0", "g1"), ("g1", "s0"),
+             ("g1", "g2"), ("f1", "f0"), ("f2", "f0")]
+    seed_hosts = ["s0", "g2", "absent.example"]
+    df = spark.createDataFrame(edges, "src string, dst string")
+    seeds = spark.createDataFrame([(h,) for h in seed_hosts], "host string")
+
+    def driver_law(*_a, **_k):
+        raise AssertionError("over-cap seed set took the driver path")
+
+    monkeypatch.setattr(H, "_TRUSTRANK_SEED_CAP", len(seed_hosts) - 1)
+    monkeypatch.setattr(H, "host_trustrank_py", driver_law)
+    got = {
+        r["host"]: r["trust"]
+        for r in H.host_trustrank(df, seeds, iters=4).collect()
+    }
+    assert got == ref(edges, seed_hosts, iters=4)
+
 def test_focused_host_relevance(spark):
     """Anchor keyword share per target host, word-boundary matched on
     the lowercased collapsed anchor."""

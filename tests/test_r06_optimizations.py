@@ -346,12 +346,15 @@ def test_two_level_banding_complete_vs_brute_force(spark):
         assert got == brute, fam
 
 
-def test_ann_selfjoin_prefiltered_matches_inline_path(spark, monkeypatch):
-    """r06 continuation: the broadcast-matrix numpy pair prefilter must
-    return EXACTLY the rows of the pure-Spark inline path (forced by
-    dropping the broadcast budget to zero — the 100 TB fallback), for
-    both hash families."""
+def test_ann_selfjoin_prefiltered_matches_inline_path(spark):
+    """r06 continuation: the per-bucket numpy pair prefilter must
+    return EXACTLY the rows of the reference composition — every
+    bucket_candidate_pairs candidate, exactly reranked by cosine — for
+    both hash families. A null, a short and a NaN vector exercise the
+    unscored pass-through (Spark ranks a NaN cosine above any
+    threshold)."""
     from go_htmldate_spark.operators import similarity as S
+    from go_htmldate_spark.operators.dedup import bucket_candidate_pairs
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet").select(
         "vec_id", "embedding"
@@ -359,30 +362,41 @@ def test_ann_selfjoin_prefiltered_matches_inline_path(spark, monkeypatch):
     dup = emb.filter(F.col("vec_id") % 9 == 0).select(
         (F.col("vec_id") + 100000).alias("vec_id"), "embedding"
     )
-    corpus = emb.unionByName(dup)
+    odd = spark.createDataFrame(
+        [(900001, None), (900002, [0.1] * 63), (900003, [float("nan")] * 64)],
+        "vec_id long, embedding array<float>",
+    )
+    corpus = emb.unionByName(dup).unionByName(odd)
+    vec = F.col("embedding").cast("array<double>")
+    va = corpus.select(F.col("vec_id").alias("a"), vec.alias("_va"))
+    vb = corpus.select(F.col("vec_id").alias("b"), vec.alias("_vb"))
+    cos = S.cosine(F.col("_va"), F.col("_vb"))
+
+    def rows(df):  # NaN != NaN, so compare a NaN cosine as None
+        return sorted((a, b, None if c != c else c) for a, b, c in df.collect())
+
     for fam in ("xxhash64", "md5"):
-        fast = sorted(
-            map(tuple, S.ann_selfjoin_pairs(
-                corpus, dim=64, min_cosine=0.9, n_planes=8, n_tables=8,
-                hash_family=fam,
-            ).collect())
+        got = rows(S.ann_selfjoin_pairs(
+            corpus, dim=64, min_cosine=0.9, n_planes=8, n_tables=8,
+            hash_family=fam,
+        ))
+        banded = S._ann_banded(corpus, 64, "vec_id", "embedding", 8, 8, fam)
+        pairs = bucket_candidate_pairs(
+            banded.select("vec_id", "band", "bucket"), "vec_id", 1024
         )
-        monkeypatch.setattr(S, "_PREFILTER_BUDGET_DOUBLES", 0)
-        inline = sorted(
-            map(tuple, S.ann_selfjoin_pairs(
-                corpus, dim=64, min_cosine=0.9, n_planes=8, n_tables=8,
-                hash_family=fam,
-            ).collect())
+        want = rows(
+            pairs.join(va, "a").join(vb, "b")
+            .filter(cos >= 0.9)
+            .select("a", "b", F.round(cos, 4))
         )
-        monkeypatch.undo()
-        assert fast == inline and fast, fam
+        assert got == want and got, fam
 
 
-def test_lsh_jaccard_fused_matches_composed_path(spark, monkeypatch):
+def test_lsh_jaccard_fused_matches_composed_path(spark):
     """r06 continuation: the bucket-fused jaccard verify must return
-    EXACTLY the rows of lsh_candidate_pairs + jaccard_verify_pairs
-    (forced via a zero broadcast budget — the 100 TB fallback inside
-    the same function)."""
+    EXACTLY the rows of the reference composition lsh_candidate_pairs →
+    jaccard_verify_pairs, for both signature hash families (hashed and
+    raw bucket keys), with null, empty and short texts."""
     from go_htmldate_spark.operators import dedup as D
 
     d = spark.read.parquet(f"{SF}/documents.parquet").select(
@@ -392,24 +406,62 @@ def test_lsh_jaccard_fused_matches_composed_path(spark, monkeypatch):
         (F.col("doc_id") + 1000000).alias("doc_id"), "text"
     )
     corpus = d.unionByName(dup)
-    # null/empty texts exercise the None-set drop path
+    # null/empty texts exercise the null-token-array drop
     extra = spark.createDataFrame(
         [(8000001, None), (8000002, ""), (8000003, "one two")],
         "doc_id long, text string",
     )
     corpus = corpus.unionByName(extra)
-    sigs = D.minhash_signatures(corpus, n_hashes=16, hash_family="md5_seeded")
-    fused = sorted(map(tuple, D.lsh_jaccard_verified_pairs(
-        corpus, sigs, bands=4, max_bucket=1_000_000,
-        hashed_buckets=False, min_jaccard=0.5,
+    for fam, hashed in (("md5_seeded", False), ("xxhash64", True)):
+        sigs = D.minhash_signatures(corpus, n_hashes=16, hash_family=fam)
+        fused = sorted(map(tuple, D.lsh_jaccard_verified_pairs(
+            corpus, sigs, bands=4, max_bucket=1_000_000,
+            hashed_buckets=hashed, min_jaccard=0.5,
+        ).collect()))
+        cand = D.lsh_candidate_pairs(
+            sigs, bands=4, max_bucket=1_000_000, hashed_buckets=hashed
+        )
+        composed = sorted(map(tuple, D.jaccard_verify_pairs(
+            corpus, cand, min_jaccard=0.5
+        ).collect()))
+        assert fused == composed and fused, fam
+
+
+def test_pair_operators_pin_duplicate_id_rows(spark):
+    """Both pair operators assume unique ids; this pins what a
+    duplicated id returns. Each row is scored with its own payload, an
+    id pair comes back once per passing vector pair (ANN) or distinct
+    (intersection, union) (LSH), and the two rows of one id never
+    pair."""
+    from go_htmldate_spark.operators.dedup import lsh_jaccard_verified_pairs
+    from go_htmldate_spark.operators.similarity import ann_selfjoin_pairs
+
+    # id 2 carries two vectors, both near id 1's; id 3 is orthogonal
+    emb = spark.createDataFrame(
+        [(1, [1.0, 1.0, 1.0, 1.0]), (2, [1.0, 1.0, 1.0, 0.9]),
+         (2, [1.0, 1.0, 0.8, 1.0]), (3, [-1.0, 1.0, -1.0, 1.0])],
+        "vec_id long, embedding array<float>",
+    )
+    got = sorted(map(tuple, ann_selfjoin_pairs(
+        emb, dim=4, min_cosine=0.9, n_planes=2, n_tables=8,
     ).collect()))
-    monkeypatch.setattr(D, "_TOKEN_SET_BUDGET_BYTES", 0)
-    composed = sorted(map(tuple, D.lsh_jaccard_verified_pairs(
-        corpus, sigs, bands=4, max_bucket=1_000_000,
-        hashed_buckets=False, min_jaccard=0.5,
+    assert got == [(1, 2, 0.9959), (1, 2, 0.999)]
+
+    # one shared bucket (identical signatures, raw keys); id 2 carries
+    # two texts: id 1's own, and id 1's plus one word
+    docs = spark.createDataFrame(
+        [(1, "a b c d e f g h"), (2, "a b c d e f g h"),
+         (2, "a b c d e f g h x"), (3, "p q r s")],
+        "doc_id long, text string",
+    )
+    sigs = spark.createDataFrame(
+        [(i, [7, 7, 7, 7]) for i in (1, 2, 3)],
+        "doc_id long, minhash array<long>",
+    )
+    got = sorted(map(tuple, lsh_jaccard_verified_pairs(
+        docs, sigs, bands=1, hashed_buckets=False, min_jaccard=0.5,
     ).collect()))
-    monkeypatch.undo()
-    assert fused == composed and fused
+    assert got == [(1, 2, 0.888889), (1, 2, 1.0)]
 
 
 def test_dup_span_interval_arithmetic_matches_brute_force(spark):

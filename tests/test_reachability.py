@@ -47,6 +47,8 @@ TEST_ORACLES = {
         "selectors: date_rule's strOr short-circuit",
     "discard_rule":
         "selectors: archive.org banner rule that _cdom.prune_and_collect must apply",
+    "jaccard_verify_pairs":
+        "dedup: pair-join Jaccard verify that lsh_jaccard_verified_pairs must equal",
 }
 
 
